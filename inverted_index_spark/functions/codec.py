@@ -31,6 +31,11 @@ import numpy as np
 
 DEFAULT_BLOCK = 128
 
+
+class CorruptSegmentError(ValueError):
+    """A stored posting stream disagrees with its block metadata."""
+
+
 # ---------------------------------------------------------------- varint ---
 
 
@@ -159,12 +164,16 @@ def encode_postings(
 
 def decode_rows_concat(
     postings_seq, tfs_seq, dls_seq, blocks_seq
-) -> tuple[np.ndarray, np.ndarray, np.ndarray, np.ndarray] | None:
+) -> tuple[np.ndarray, np.ndarray, np.ndarray, np.ndarray]:
     """Decode MANY rows' FULL posting streams in one vectorized pass.
 
     Returns (row_lens, doc_ids, tfs, dls): per-row posting counts plus
     the concatenated decoded arrays (doc_ids int64, tf/dl uint64), rows
-    in input order. None when there is nothing to decode.
+    in input order; empty arrays when there is nothing to decode.
+    Raises :class:`CorruptSegmentError` when the streams do not decode
+    to exactly the postings the block metadata declares (truncated,
+    padded or foreign streams) — a caller must never read a bucket as
+    empty because its bytes are bad.
 
     Why (round-6, guide §1.2): per-row :func:`decode_postings` costs
     ~60-80 µs of fixed numpy overhead regardless of row size — on
@@ -184,15 +193,14 @@ def decode_rows_concat(
                 ns.append(b["n"])
                 k += 1
         row_nblocks.append(k)
-    if not ns:
-        return None
     bn = np.asarray(ns, dtype=np.int64)
-    deltas = decode_varint(b"".join(postings_seq))
-    tf = decode_varint(b"".join(tfs_seq))
-    dl = decode_varint(b"".join(dls_seq))
     total = int(bn.sum())
-    if not (len(deltas) == len(tf) == len(dl) == total):
-        return None  # foreign/padded streams — caller falls back per-row
+    deltas = _decode_exact("postings", postings_seq, total)
+    tf = _decode_exact("tfs", tfs_seq, total)
+    dl = _decode_exact("dls", dls_seq, total)
+    row_lens = np.zeros(len(row_nblocks), dtype=np.int64)
+    if not total:
+        return row_lens, deltas.view(np.int64), tf, dl
     # segmented cumsum: absolute value at every block start
     starts = np.concatenate(([0], np.cumsum(bn[:-1])))
     csum = np.cumsum(deltas, dtype=np.uint64)
@@ -201,11 +209,21 @@ def decode_rows_concat(
     # per-row posting counts = sum of its blocks' n (vectorized)
     rnb = np.asarray(row_nblocks, dtype=np.int64)
     nz = np.flatnonzero(rnb)
-    row_lens = np.zeros(len(rnb), dtype=np.int64)
-    if len(nz):
-        first_block = np.concatenate(([0], np.cumsum(rnb)))[:-1]
-        row_lens[nz] = np.add.reduceat(bn, first_block[nz])
+    first_block = np.concatenate(([0], np.cumsum(rnb)))[:-1]
+    row_lens[nz] = np.add.reduceat(bn, first_block[nz])
     return row_lens, docs, tf, dl
+
+
+def _decode_exact(name: str, seq, total: int) -> np.ndarray:
+    """One stream kind's concatenated varints, exactly ``total`` of them."""
+    buf = np.frombuffer(b"".join(seq), dtype=np.uint8)
+    # a final byte with its continuation bit set is a cut varint
+    vals = decode_varint(buf) if not len(buf) or buf[-1] < 0x80 else None
+    if vals is None or len(vals) != total:
+        raise CorruptSegmentError(
+            f"{name} streams do not hold the {total} postings their blocks declare"
+        )
+    return vals
 
 
 def decode_postings(

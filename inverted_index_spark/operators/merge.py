@@ -81,10 +81,9 @@ def _merge_bucket_pdf(
     # whole bucket instead of a per-row decode_postings call — on
     # fragment segments (tens of thousands of tiny rows per bucket)
     # the per-row fixed overhead was 80% of the merge kernel, measured
-    dec = decode_rows_concat(pdf["postings"], pdf["tfs"], pdf["dls"], pdf["blocks"])
-    if dec is None:
-        return passthrough
-    row_lens, docs, tfs_a, dls_a = dec
+    row_lens, docs, tfs_a, dls_a = decode_rows_concat(
+        pdf["postings"], pdf["tfs"], pdf["dls"], pdf["blocks"]
+    )
     terms_rep = np.repeat(pdf["term"].to_numpy(), row_lens)
     tfs_a = tfs_a.astype(np.int64)
     dls_a = dls_a.astype(np.int64)

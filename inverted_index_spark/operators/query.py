@@ -22,6 +22,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from inverted_index_spark.functions.codec import (
+    CorruptSegmentError,
     decode_postings,
     decode_rows_concat,
 )
@@ -51,9 +52,12 @@ def _decode_rows(
             # on many-small-row scans (fragment segments, whole-index
             # reads). Range-scoped reads keep the block-pruned per-row
             # path below. Falls through on a stream-length mismatch.
-            dec = decode_rows_concat(
-                pdf["postings"], pdf["tfs"], pdf["dls"], pdf["blocks"]
-            )
+            try:
+                dec = decode_rows_concat(
+                    pdf["postings"], pdf["tfs"], pdf["dls"], pdf["blocks"]
+                )
+            except CorruptSegmentError:
+                dec = None
             if dec is not None:
                 row_lens, docs, tf_a, dl_a = dec
                 if len(docs):
@@ -97,15 +101,22 @@ def term_in_pred(col: str, terms: list[str]):
     py4j round-trip (~0.5 ms each — measured 1.0 s of pure driver time
     for a 2000-term batch predicate, round-6); rendering the predicate
     as ONE SQL string costs ~2 ms and parses to the identical In
-    expression (same pushdown, same results). Small lists keep isin;
-    large lists take the expr path with backslash/quote escaping."""
+    expression (same pushdown, same results). Small lists keep isin.
+
+    A quote or backslash inside a SQL literal parses differently under
+    ``spark.sql.parser.escapedStringLiterals``, so terms carrying either
+    take isin and only the rest are rendered — the predicate never
+    depends on session conf."""
     terms = list(terms)
     if len(terms) <= _SQL_SAFE_MAX_ISIN:
         return F.col(col).isin(terms)
-    inlist = ",".join(
-        "'" + t.replace("\\", "\\\\").replace("'", "\\'") + "'" for t in terms
-    )
-    return F.expr(f"`{col}` IN ({inlist})")
+    odd = [t for t in terms if "'" in t or "\\" in t]
+    plain = [t for t in terms if "'" not in t and "\\" not in t]
+    if not plain:
+        return F.col(col).isin(odd)
+    inlist = ",".join(f"'{t}'" for t in plain)
+    pred = F.expr(f"`{col}` IN ({inlist})")
+    return pred | F.col(col).isin(odd) if odd else pred
 
 
 def matching_rows(
@@ -633,12 +644,9 @@ def _bucket_setop_rows(
             return empty  # a query term absent from this bucket
         if min_doc is None and max_doc is None:
             # batched decode: one varint pass per stream for the bucket
-            dec = decode_rows_concat(
+            row_lens, docs, _, _ = decode_rows_concat(
                 pdf["postings"], pdf["tfs"], pdf["dls"], pdf["blocks"]
             )
-            if dec is None:
-                return empty
-            row_lens, docs, _, _ = dec
             code_rep = np.repeat(codes.astype(np.int64), row_lens)
         else:
             # range-scoped: per-row block-pruned decode

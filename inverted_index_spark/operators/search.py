@@ -37,6 +37,41 @@ def _maybe_broadcast(spark: SparkSession, payload):
     return spark.sparkContext.broadcast(payload)
 
 
+def _one_task_topk(rows: DataFrame, query_map, avgdl: float, k: int) -> DataFrame:
+    """Exact BM25 top-k for every query of a batch in ONE Python task
+    over the matched posting rows → (qid, rank, doc_id, score).
+    ``query_map()`` returns (qid → sorted live terms, term → idf) on
+    the executor. Postings are decoded and scored once for the whole
+    batch (:func:`wand._materialized_contributions`), then each query
+    ranks its terms' slices (:func:`wand._topk_from_contributions`):
+    the bucket plan's exhaustive kernel run over every bucket at once,
+    so scores match it bit for bit (terms ascending, docs ascending,
+    bincount). Single-segment stores only, where every (term, doc)
+    posting is stored once."""
+
+    def run(batches):
+        qmap, idf_map = query_map()
+        pdfs = list(batches)
+        contribs = (
+            _wand._materialized_contributions(pd.concat(pdfs), idf_map, avgdl)
+            if pdfs
+            else {}
+        )
+        ranked = [
+            (qid, rank, d, sc)
+            for qid, ts in qmap.items()
+            for rank, (d, sc) in enumerate(
+                _wand._topk_from_contributions(ts, contribs, k), 1
+            )
+        ]
+        out = pd.DataFrame(ranked, columns=["qid", "rank", "doc_id", "score"])
+        yield out.astype({"rank": "int32", "doc_id": "int64", "score": "float64"})
+
+    return rows.coalesce(1).mapInPandas(
+        run, schema="qid string, rank int, doc_id long, score double"
+    )
+
+
 def _purged_postings(spark: SparkSession, store: SegmentStore, raw: DataFrame) -> DataFrame:
     """Rewrite a postings scan with the store's live deletes physically
     removed (decode → mask → re-encode, per (bucket, term) row). Runs
@@ -400,49 +435,49 @@ class Searcher:
                 self._df_memo[t] = found.get(t, 0)
         return {t: self._df_memo[t] for t in set(terms) if self._df_memo[t] > 0}
 
-    # latency gate bounds: a read whose Σdf bound is under
-    # SMALL_READ_CAP (≤ ~16 MB of raw doc_ids) on a store whose TOTAL
-    # postings fit under SINGLE_TASK_SCAN_CAP runs as ONE task over the
-    # cache instead of a 3-stage distinct + range-sorted plan
+    # latency gate bounds (see _one_task); SMALL_READ_CAP postings are
+    # ≤ ~16 MB of raw doc_ids
     SMALL_READ_CAP = 2_000_000
     SINGLE_TASK_SCAN_CAP = 20_000_000
+
+    def _one_task(self, bound: int) -> bool:
+        """The latency gate of read_values, topk and topk_batch: True
+        when ``bound`` (Σdf of the call's terms, free driver-side from
+        the complete df dictionary of a single-segment open) is small
+        enough to run the call as ONE Python task over the cache. Each
+        Python task pays a fixed start-up cost of a few hundred ms
+        (README.md), so fewer tasks is the lever. The scan cap keeps a
+        coalesce(1) scan, which serializes the WHOLE cache through one
+        executor, off large stores (the 100 TB shape)."""
+        return (
+            self._df_complete
+            and bound <= self.SMALL_READ_CAP
+            and self._n_postings() <= self.SINGLE_TASK_SCAN_CAP
+        )
 
     def read_values(self, terms: list[str], min_doc=None, max_doc=None) -> DataFrame:
         if not terms:
             return self.spark.range(0).select(F.col("id").alias("doc_id"))
         rows = self._matching(terms, min_doc, max_doc)
-        # Latency gate: when the complete term→df dictionary is warm
-        # (single-segment open), Σdf over the query terms bounds the
-        # result rows DRIVER-SIDE for free. A small read on a modest
-        # store then collapses to ONE task — one scan of the cached
-        # postings, decode, np.unique — no distinct exchange, no
-        # orderBy range-sampling job. Measured on the 120k-turn bench
-        # store: 0.60 s/read → 0.31 s/read. The second cap keeps the
-        # single task honest at scale: a coalesce(1) scan serializes
-        # the WHOLE cache through one executor, so stores past
-        # SINGLE_TASK_SCAN_CAP total postings keep the declarative
-        # distinct().orderBy() plan (the 100 TB shape) regardless of
-        # result size.
-        if self._df_complete:
-            bound = sum(self._df_memo.get(t, 0) for t in set(terms))
-            if (
-                bound <= self.SMALL_READ_CAP
-                and self._n_postings() <= self.SINGLE_TASK_SCAN_CAP
-            ):
+        # Latency gate: one scan of the cached postings, decode,
+        # np.unique — no distinct exchange, no orderBy range-sampling
+        # job. Measured on the 120k-turn bench store: 0.60 s/read →
+        # 0.31 s/read.
+        if self._one_task(sum(self._df_memo.get(t, 0) for t in set(terms))):
 
-                def _one_task(batches):
-                    chunks = [
-                        pdf["doc_id"].to_numpy(np.int64)
-                        for pdf in _decode_rows(batches, min_doc, max_doc, False)
-                    ]
-                    vals = (
-                        np.unique(np.concatenate(chunks))
-                        if chunks
-                        else np.zeros(0, dtype=np.int64)
-                    )
-                    yield pd.DataFrame({"doc_id": vals})
+            def _unique_docs(batches):
+                chunks = [
+                    pdf["doc_id"].to_numpy(np.int64)
+                    for pdf in _decode_rows(batches, min_doc, max_doc, False)
+                ]
+                vals = (
+                    np.unique(np.concatenate(chunks))
+                    if chunks
+                    else np.zeros(0, dtype=np.int64)
+                )
+                yield pd.DataFrame({"doc_id": vals})
 
-                return rows.coalesce(1).mapInPandas(_one_task, schema="doc_id long")
+            return rows.coalesce(1).mapInPandas(_unique_docs, schema="doc_id long")
         decoded = rows.mapInPandas(
             lambda it: _decode_rows(it, min_doc, max_doc, False),
             schema="term string, doc_id long",
@@ -535,28 +570,29 @@ class Searcher:
         self, queries: dict[str, list[str]], k: int = 10, use_wand: bool = False
     ) -> DataFrame:
         """Run MANY BM25 top-k queries in ONE Spark job: (qid, rank,
-        doc_id, score). Amortizes per-job scheduling latency across the
-        batch — the idiomatic Spark shape for query throughput (a
-        1000-executor cluster serves a query *stream* as unioned
-        batches, not one job per query).
+        doc_id, score), ≤ k rows per query by score desc, doc_id asc.
 
-        Plan: ONE pass over the matched postings grouped by bucket; the
-        query map rides in the task closure (small); inside each bucket
-        every query runs over shared block handles, so each posting
-        block is decoded AT MOST ONCE for the whole batch and no
-        posting bytes are ever duplicated per query through a shuffle.
-        Output is only ≤ k rows per (bucket, query) → window top-k.
+        Two exact plans with identical rows and scores, chosen by the
+        latency gate (:meth:`_one_task`) on Σ over queries of Σdf of
+        each query's live terms:
 
-        Default scorer is the VECTORIZED exhaustive kernel, not WAND
-        (results identical — both are tested/oracle-gated): with blocks
-        already decoded once per batch, WAND's per-span Python
-        bookkeeping costs more than its pruning saves, measured 2x at
-        2M turns (27 → 56 QPS at 32 cores, 300-query batch). WAND
-        remains the right engine for the per-query path (topk), where
-        k ≪ matched docs and pruning bounds the decode itself.
+        - **single task** (gate on): one coalesce(1) Python task over
+          the cached matched rows scores every posting once and emits
+          the final ranked rows — no bucket stage, no qid Window
+          exchange. At this size the Python task count, not scoring,
+          sets the op's time.
+        - **bucket plan** (larger batches, multi-segment stores): the
+          matched postings grouped by bucket; each bucket decodes every
+          block AT MOST ONCE for the whole batch, emits ≤ k rows per
+          query, and a Window over qid ranks them.
+
+        ``use_wand`` picks the bucket plan's scorer; the single task is
+        always exhaustive. The default is the vectorized exhaustive
+        kernel: with blocks decoded once per batch, WAND's per-span
+        Python bookkeeping costs more than its pruning saves, measured
+        2x at 2M turns (27 → 56 QPS at 32 cores, 300-query batch).
         """
         from pyspark.sql import Window
-        import pandas as pd
 
         n_docs, avgdl = self.stats
         all_terms = sorted({t for ts in queries.values() for t in ts})
@@ -581,8 +617,14 @@ class Searcher:
         if bc is not None:
             payload = None
 
+        def query_map():
+            return bc.value if bc is not None else payload
+
+        if self._one_task(sum(dfs[t] for ts in qmap.values() for t in ts)):
+            return _one_task_topk(rows, query_map, avgdl, k)
+
         def run(pdf: pd.DataFrame) -> pd.DataFrame:
-            _qmap, _idf_map = bc.value if bc is not None else payload
+            _qmap, _idf_map = query_map()
             qids, docs, scores = [], [], []
             if use_wand:
                 handles = {
@@ -630,52 +672,6 @@ class Searcher:
             .select("qid", "rank", "doc_id", "score")
         )
 
-    def _topk_one_task(
-        self, rows: DataFrame, idf_map: dict[str, float], avgdl: float, k: int
-    ) -> DataFrame:
-        """Single-task exact BM25 top-k over the matched posting rows
-        (the gated small-query plan; single-segment stores only, so no
-        cross-segment duplicate rows can reach the accumulator)."""
-        from inverted_index_spark.functions.codec import decode_postings
-
-        k1, b = _bm25.K1, _bm25.B
-
-        def _run(batches):
-            doc_parts, contrib_parts = [], []
-            for pdf in batches:
-                for term, p, t, l, blocks in zip(
-                    pdf["term"], pdf["postings"], pdf["tfs"], pdf["dls"], pdf["blocks"]
-                ):
-                    d, tf, dl = decode_postings(p, t, l, blocks)
-                    if not len(d):
-                        continue
-                    w = idf_map[term]
-                    c = w * tf.astype(np.float64) / (
-                        tf.astype(np.float64)
-                        + k1 * (1 - b + b * dl.astype(np.float64) / avgdl)
-                    )
-                    doc_parts.append(d.astype(np.int64))
-                    contrib_parts.append(c)
-            if not doc_parts:
-                yield pd.DataFrame(
-                    {
-                        "doc_id": pd.Series(dtype="int64"),
-                        "score": pd.Series(dtype="float64"),
-                    }
-                )
-                return
-            dd = np.concatenate(doc_parts)
-            cc = np.concatenate(contrib_parts)
-            uniq_d, inv = np.unique(dd, return_inverse=True)
-            sums = np.bincount(inv, weights=cc, minlength=len(uniq_d))
-            order = np.lexsort((uniq_d, -sums))[:k]  # score desc, doc asc
-            yield pd.DataFrame({"doc_id": uniq_d[order], "score": sums[order]})
-
-        out = rows.coalesce(1).mapInPandas(_run, schema="doc_id long, score double")
-        # one partition in, ≤k rows out: a partition-local sort pins the
-        # global (score desc, doc_id asc) contract without an exchange
-        return out.sortWithinPartitions(F.desc("score"), F.asc("doc_id"))
-
     def topk(self, terms: list[str], k: int = 10, use_wand: bool = True) -> DataFrame:
         uniq = sorted(set(terms))
         n_docs, avgdl = self.stats
@@ -686,24 +682,16 @@ class Searcher:
                 F.col("id").alias("doc_id"), F.lit(0.0).alias("score")
             )
         rows = self._matching(list(idf_map))
-        # Latency gate (mirrors read_values): a small query on a
-        # df-complete store scores in ONE task — decode + per-doc
-        # bincount + top-k inside a single mapInPandas pass over the
-        # cached postings; no bucket exchange, no TakeOrdered merge.
-        # Both kernels are exact, so the gated plan answers either
-        # use_wand setting with identical rows. Σdf bounds the decoded
-        # rows driver-side for free; the scan cap keeps the coalesce(1)
-        # plan off stores big enough that serializing the whole cache
-        # through one executor would be the new bottleneck.
-        if self._df_complete:
-            bound = sum(dfs.get(t, 0) for t in idf_map)
-            if (
-                bound <= self.SMALL_READ_CAP
-                and self._n_postings() <= self.SINGLE_TASK_SCAN_CAP
-            ):
-                return self._topk_one_task(rows, idf_map, avgdl, k)
+        # Latency gate: the one-query call of topk_batch's single-task
+        # kernel — no bucket exchange, no TakeOrdered merge. It is
+        # exact, so it answers either use_wand setting with identical
+        # rows; its one partition already holds them in rank order.
+        if self._one_task(sum(dfs[t] for t in idf_map)):
+            qmap = {"": list(idf_map)}
+            return _one_task_topk(
+                rows, lambda: (qmap, idf_map), avgdl, k
+            ).select("doc_id", "score")
         if use_wand:
-            import pandas as pd
 
             def run(pdf: pd.DataFrame) -> pd.DataFrame:
                 return _wand._wand_bucket(pdf, idf_map, avgdl, k)
@@ -717,38 +705,16 @@ class Searcher:
         # only ≤(distinct docs per batch) small rows hit the shuffle —
         # never the exploded postings. Buckets are disjoint doc ranges,
         # so partial sums per doc are always combinable.
-        import numpy as np
-        import pandas as pd
-
-        k1, b = _bm25.K1, _bm25.B
-
-        from inverted_index_spark.functions.codec import decode_postings
-
         def score_batches(batches):
             for pdf in batches:
-                doc_parts, contrib_parts = [], []
-                for term, p, t, l, blocks in zip(
-                    pdf["term"], pdf["postings"], pdf["tfs"], pdf["dls"], pdf["blocks"]
-                ):
-                    d, tf, dl = decode_postings(p, t, l, blocks)
-                    if not len(d):
-                        continue
-                    w = idf_map[term]
-                    c = w * tf.astype(np.float64) / (
-                        tf.astype(np.float64)
-                        + k1 * (1 - b + b * dl.astype(np.float64) / avgdl)
-                    )
-                    doc_parts.append(d.astype(np.int64))
-                    contrib_parts.append(c)
-                if not doc_parts:
-                    continue
-                dd = np.concatenate(doc_parts)
-                cc = np.concatenate(contrib_parts)
-                uniq, inv = np.unique(dd, return_inverse=True)
-                # bincount, not add.at: ~10x faster on repeated indices
-                # (measured for the batch kernel, wand.py)
-                sums = np.bincount(inv, weights=cc, minlength=len(uniq))
-                yield pd.DataFrame({"doc_id": uniq, "score": sums})
+                contribs = _wand._materialized_contributions(pdf, idf_map, avgdl)
+                if contribs:
+                    ts = sorted(contribs)
+                    d = np.concatenate([contribs[t][0] for t in ts])
+                    c = np.concatenate([contribs[t][1] for t in ts])
+                    uniq, inv = np.unique(d, return_inverse=True)
+                    sums = np.bincount(inv, weights=c, minlength=len(uniq))
+                    yield pd.DataFrame({"doc_id": uniq, "score": sums})
 
         partial = rows.mapInPandas(score_batches, schema="doc_id long, score double")
         if not self._single_segment:

@@ -132,10 +132,9 @@ def _materialized_contributions(
     rows merged doc-sorted keep-first exactly like _term_handles."""
     from inverted_index_spark.functions.codec import decode_rows_concat
 
-    dec = decode_rows_concat(pdf["postings"], pdf["tfs"], pdf["dls"], pdf["blocks"])
-    if dec is None:
-        return {}
-    row_lens, docs, tf, dl = dec
+    row_lens, docs, tf, dl = decode_rows_concat(
+        pdf["postings"], pdf["tfs"], pdf["dls"], pdf["blocks"]
+    )
     tfn = _tf_norm(tf.astype(np.float64), dl.astype(np.float64), avgdl)
     starts = np.concatenate(([0], np.cumsum(row_lens)))
     terms = pdf["term"].to_numpy()
@@ -167,10 +166,11 @@ def _topk_from_contributions(
     contribs: dict[str, tuple[np.ndarray, np.ndarray]],
     k: int,
 ) -> list[tuple[int, float]]:
-    """Exhaustive top-k over precomputed per-term contributions —
-    bit-identical accumulation order to _exhaustive_from_handles
-    (terms ascending, docs ascending within term, bincount scatter-add,
-    stable descending argsort → ties break doc asc)."""
+    """Exhaustive top-k over precomputed per-term contributions, the
+    ranking every exhaustive scorer shares: terms ascending, docs
+    ascending within term, bincount scatter-add (np.add.at is an order
+    of magnitude slower on repeated indices — measured on this kernel),
+    stable descending argsort → ties break doc asc."""
     doc_parts = []
     contrib_parts = []
     for t in terms:  # callers pass sorted term lists
@@ -194,27 +194,13 @@ def _exhaustive_from_handles(
     """Decode-everything scorer for tiny posting sets where span
     bookkeeping costs more than it prunes (round-2 adaptivity). Blocks
     within a term are doc-disjoint, so one concat per term is exact."""
-    doc_parts, contrib_parts = [], []
-    for t in sorted(terms):
-        for h in terms[t]:
-            docs, tfs, dls = h.decode()
-            if not len(docs):
-                continue
-            c = idf_map[t] * _tf_norm(
-                tfs.astype(np.float64), dls.astype(np.float64), avgdl
-            )
-            doc_parts.append(docs)
-            contrib_parts.append(c)
-    if not doc_parts:
-        return []
-    d = np.concatenate(doc_parts)
-    c = np.concatenate(contrib_parts)
-    uniq, inv = np.unique(d, return_inverse=True)
-    # bincount is the vectorized scatter-add (np.add.at is an order of
-    # magnitude slower on repeated indices — measured on this kernel)
-    scores = np.bincount(inv, weights=c, minlength=len(uniq))
-    order = np.argsort(-scores, kind="stable")[:k]  # ties → doc_id asc
-    return [(int(uniq[i]), float(scores[i])) for i in order]
+    contribs = {}
+    for t, hs in terms.items():
+        if hs:
+            docs, tfs, dls = map(np.concatenate, zip(*(h.decode() for h in hs)))
+            tfn = _tf_norm(tfs.astype(np.float64), dls.astype(np.float64), avgdl)
+            contribs[t] = (docs, idf_map[t] * tfn)
+    return _topk_from_contributions(sorted(terms), contribs, k)
 
 
 def _wand_from_handles(

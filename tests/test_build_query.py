@@ -174,6 +174,25 @@ def test_unicode_terms(spark, store):
     assert _vals(read_all_values(spark, store, ["бесплатно"])) == [1]
 
 
+def test_long_term_list_ignores_escaped_string_literals(spark, store):
+    # lists past the isin cutoff render one SQL IN string; a term with
+    # a quote or backslash must match whatever the parser conf says
+    odd = ["it's", "a\\b", "'", "\\'", "c\\\\d"]
+    plain = [f"t{i:02d}" for i in range(40)]
+    _write(spark, store, [(t, [i]) for i, t in enumerate(odd + plain)])
+    key = "spark.sql.parser.escapedStringLiterals"
+    old = spark.conf.get(key)
+    try:
+        for mode in ("false", "true"):
+            spark.conf.set(key, mode)
+            got = _vals(read_all_values(spark, store, odd + plain))
+            assert got == list(range(len(odd + plain))), mode
+            got = _vals(read_all_values(spark, store, odd[:2] + plain))
+            assert got == [0, 1] + list(range(len(odd), len(odd + plain))), mode
+    finally:
+        spark.conf.set(key, old)
+
+
 def test_values_dedup_within_put(spark, store):
     # writer sort-dedups values (sliceSortUnique, single/single.go:230-256)
     _write(spark, store, [("t", [5, 1, 5, 3, 1])])

@@ -8,7 +8,9 @@ import numpy as np
 import pytest
 
 from inverted_index_spark.functions.codec import (
+    CorruptSegmentError,
     decode_postings,
+    decode_rows_concat,
     decode_varint,
     encode_postings,
     encode_varint,
@@ -101,3 +103,39 @@ def test_postings_empty():
     assert blocks == [] and p == b""
     rd, rt, rl = decode_postings(p, t, d, blocks)
     assert len(rd) == 0
+
+
+def test_truncated_stream_raises_in_every_batched_decoder(spark, tmp_path):
+    """A row whose postings stream lost its last byte must fail every
+    batched-decode kernel loudly — never read as an empty bucket
+    (scoring), a dropped term (compaction) or no matches (set ops)."""
+    from pyspark.sql import functions as F
+
+    from inverted_index_spark.operators.build import SegmentWriter
+    from inverted_index_spark.operators.merge import _merge_bucket_pdf
+    from inverted_index_spark.operators.query import _bucket_setop_rows
+    from inverted_index_spark.operators.wand import _materialized_contributions
+    from inverted_index_spark.sources.store import SegmentStore
+
+    empty = decode_rows_concat([], [], [], [])
+    assert [len(a) for a in empty] == [0, 0, 0, 0]
+
+    store = SegmentStore(str(tmp_path / "idx"))
+    w = SegmentWriter(spark, store, block_size=2)
+    w.put("a", [1, 2, 3])
+    w.put("b", [2, 30, 50, 700])
+    w.close()
+    rows = store.read_postings(spark).withColumn(
+        "postings",
+        F.when(
+            F.col("term") == "b",
+            F.expr("substring(postings, 1, length(postings) - 1)"),
+        ).otherwise(F.col("postings")),
+    )
+    pdf = rows.toPandas()
+    with pytest.raises(CorruptSegmentError):
+        _materialized_contributions(pdf, {"a": 1.0, "b": 1.0}, 5.0)
+    with pytest.raises(CorruptSegmentError):
+        _merge_bucket_pdf(pdf, 2)
+    with pytest.raises(Exception, match="CorruptSegmentError"):
+        _bucket_setop_rows(rows, None, None, None).collect()

@@ -11,6 +11,7 @@ from inverted_index_spark.operators.query import matching_rows
 from inverted_index_spark.plans import (
     count_exchanges,
     count_exchanges_above_cache,
+    formatted_plan,
     pushed_filters,
 )
 from inverted_index_spark.sources.store import SegmentStore
@@ -209,10 +210,10 @@ def test_unigram_loglik_single_decode_pass(spark, store):
 
 
 def test_gated_small_query_plans_have_no_exchange(spark, store):
-    # the df-complete latency gate (Searcher.read_values / .topk on a
-    # small single-segment store) must compile to a single-task plan:
-    # zero Exchange operators — no distinct/orderBy shuffle, no
-    # TakeOrdered merge
+    # the df-complete latency gate (Searcher.read_values / .topk /
+    # .topk_batch on a small single-segment store) must compile to a
+    # single-task plan: zero Exchange operators — no distinct/orderBy
+    # shuffle, no TakeOrdered merge, no qid Window
     from inverted_index_spark.operators.search import Searcher
 
     s = Searcher(spark, store).open()
@@ -222,5 +223,8 @@ def test_gated_small_query_plans_have_no_exchange(spark, store):
         assert count_exchanges_above_cache(rv) == 0
         tk = s.topk(["w00000", "w00001"], k=10)
         assert count_exchanges_above_cache(tk) == 0
+        tb = s.topk_batch({"a": ["w00000", "w00001"], "b": ["w00002"]}, k=10)
+        assert count_exchanges_above_cache(tb) == 0
+        assert "Window" not in formatted_plan(tb)
     finally:
         s.close()

@@ -144,6 +144,36 @@ def test_topk_latency_gate_parity(spark, setup):
         Searcher.SMALL_READ_CAP = cap
 
 
+def test_topk_batch_latency_gate_parity(spark, setup):
+    """The single-task batch plan must return exactly the bucket plan's
+    rows — same ranks, bit-identical scores — against both bucket
+    scorers, for k beyond the result count too, a query with one
+    missing term, and a query whose terms are all missing."""
+    _, searcher = setup
+    assert searcher._df_complete
+    qs = {
+        "a": ["w00000"],
+        "b": ["w00001", "w00002"],
+        "c": ["w00042", "w00007", "w00123", "w00999", "w05000"],
+        "d": ["бесплатно", "w00000", "doesnotexist"],
+        "e": ["doesnotexist", "nosuchterm"],
+    }
+    cap = Searcher.SMALL_READ_CAP
+    try:
+        for k in (3, 10, 10_000):
+            gated = sorted(map(tuple, searcher.topk_batch(qs, k).collect()))
+            assert {r[0] for r in gated} == {"a", "b", "c", "d"}
+            Searcher.SMALL_READ_CAP = -1  # force the bucket plan
+            for wand in (True, False):
+                plain = sorted(
+                    map(tuple, searcher.topk_batch(qs, k, use_wand=wand).collect())
+                )
+                assert gated == plain, (k, wand)
+            Searcher.SMALL_READ_CAP = cap
+    finally:
+        Searcher.SMALL_READ_CAP = cap
+
+
 def test_topk_batch_wand_equals_exhaustive(spark, setup):
     """Both batched scorers are exact: WAND pruning vs the vectorized
     exhaustive default must agree row-for-row."""
