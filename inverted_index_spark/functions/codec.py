@@ -23,9 +23,17 @@ Layout produced by :func:`encode_postings`:
   in tf and decreasing in dl, so ub(block) = bm25_tf_norm(max_tf,
   min_dl) is valid for any (avgdl, idf) chosen at query time — which
   keeps WAND correct across merges that change corpus stats.
+
+Every read decodes through :func:`decode_rows_concat`: many rows at
+once, optionally scoped to a ``[min_doc, max_doc]`` range whose missed
+blocks are skipped before any varint work, and strict — a stream that
+disagrees with its block metadata raises :class:`CorruptSegmentError`
+instead of decoding short.
 """
 
 from __future__ import annotations
+
+import operator
 
 import numpy as np
 
@@ -74,20 +82,26 @@ def encode_varint(values: np.ndarray) -> tuple[bytes, np.ndarray]:
 def decode_varint(buf: bytes | memoryview | np.ndarray) -> np.ndarray:
     """Decode a LEB128 stream into a uint64 array (vectorized)."""
     b = np.frombuffer(buf, dtype=np.uint8) if not isinstance(buf, np.ndarray) else buf
-    if len(b) == 0:
-        return np.zeros(0, dtype=np.uint64)
-    is_last = (b & 0x80) == 0
-    ends = np.flatnonzero(is_last)
-    n = len(ends)
-    starts = np.empty(n, dtype=np.int64)
-    starts[0] = 0
+    return _varints(b, np.flatnonzero(b < 0x80))
+
+
+def _varints(b: np.ndarray, ends: np.ndarray) -> np.ndarray:
+    """The varints of ``b`` whose final bytes sit at ``ends``: one
+    gather per byte slot (≤ 10, usually 1-2), never a pass per byte."""
+    if len(ends) == len(b):  # every value fits one byte
+        return b.astype(np.uint64)
+    starts = np.empty_like(ends)
+    starts[:1] = 0
     starts[1:] = ends[:-1] + 1
-    # byte position within its value → shift amount
-    val_idx = np.zeros(len(b), dtype=np.int64)
-    val_idx[1:] = np.cumsum(is_last[:-1])
-    shift = ((np.arange(len(b), dtype=np.int64) - starts[val_idx]) * 7).astype(np.uint64)
-    parts = (b & np.uint8(0x7F)).astype(np.uint64) << shift
-    return np.bitwise_or.reduceat(parts, starts)
+    out = (b[starts] & 0x7F).astype(np.uint64)
+    idx = np.flatnonzero(ends > starts)
+    j = 1
+    while len(idx):
+        at = starts[idx] + j
+        out[idx] |= (b[at] & 0x7F).astype(np.uint64) << np.uint64(7 * j)
+        idx = idx[ends[idx] > at]
+        j += 1
+    return out
 
 
 # ------------------------------------------------------------- block form ---
@@ -102,6 +116,10 @@ BLOCK_FIELDS = [
     "t_off",
     "d_off",
 ]
+_BLOCK_META = operator.itemgetter(
+    "first_doc", "last_doc", "n", "p_off", "t_off", "d_off"
+)
+_I64 = np.iinfo(np.int64)
 
 
 def encode_postings(
@@ -163,116 +181,112 @@ def encode_postings(
 
 
 def decode_rows_concat(
-    postings_seq, tfs_seq, dls_seq, blocks_seq
+    postings_seq, tfs_seq, dls_seq, blocks_seq, min_doc=None, max_doc=None
 ) -> tuple[np.ndarray, np.ndarray, np.ndarray, np.ndarray]:
-    """Decode MANY rows' FULL posting streams in one vectorized pass.
+    """Decode MANY rows' posting streams in one vectorized pass — the
+    engine's only postings decoder.
 
     Returns (row_lens, doc_ids, tfs, dls): per-row posting counts plus
     the concatenated decoded arrays (doc_ids int64, tf/dl uint64), rows
     in input order; empty arrays when there is nothing to decode.
-    Raises :class:`CorruptSegmentError` when the streams do not decode
-    to exactly the postings the block metadata declares (truncated,
-    padded or foreign streams) — a caller must never read a bucket as
-    empty because its bytes are bad.
+    ``blocks_seq`` holds each row's block metadata (dicts or Rows with
+    BLOCK_FIELDS, in stream order).
 
-    Why (round-6, guide §1.2): per-row :func:`decode_postings` costs
-    ~60-80 µs of fixed numpy overhead regardless of row size — on
-    fragment segments (tens of thousands of ~10-posting rows per
-    bucket) that overhead IS the merge/read cost. Here the three varint
-    streams are each decoded ONCE over the rows' concatenated buffers,
-    and doc ids come from one segmented cumsum with restarts at every
-    block start. No range pruning — this is the decode-everything path
-    (merges, whole-index reads); range-scoped reads keep the per-row
-    block-pruned decode."""
-    ns: list[int] = []  # per-BLOCK posting counts, rows in order
+    With ``min_doc`` / ``max_doc`` the read is range-scoped, the
+    reference's preselectSegments (single/single.go:615-657): blocks
+    whose ``[first_doc, last_doc]`` misses the range are skipped before
+    any varint work, and postings outside it are dropped. Comparisons
+    are SIGNED int64 — negative ids are the wrapped upper half of
+    uint64 and compare like the Spark long schema they live in.
+
+    The selected blocks' byte slices are decoded in one pass per
+    stream; doc ids come from one segmented cumsum with restarts at
+    every block start. Raises :class:`CorruptSegmentError` unless every
+    selected block's slice holds exactly its ``n`` whole varints in
+    every stream (checked per block, so a short block and a padded
+    block cannot cancel out) and every row's bytes are covered by its
+    blocks — a caller must never read a bucket as empty, or short,
+    because its bytes are bad."""
     row_nblocks: list[int] = []
+    meta: list[tuple] = []
     for blocks in blocks_seq:
-        k = 0
-        if blocks is not None:
-            for b in blocks:
-                ns.append(b["n"])
-                k += 1
-        row_nblocks.append(k)
-    bn = np.asarray(ns, dtype=np.int64)
+        if blocks is None:
+            row_nblocks.append(0)
+        else:
+            row_nblocks.append(len(blocks))
+            meta.extend(map(_BLOCK_META, blocks))
+    rnb = np.asarray(row_nblocks, dtype=np.int64)
+    m = np.array(meta, dtype=np.int64).reshape(len(meta), 6)
+    seqs = [list(postings_seq), list(tfs_seq), list(dls_seq)]
+    lens = np.array([list(map(len, q)) for q in seqs], dtype=np.int64)
+    lens = lens.reshape(3, len(rnb)).T  # (row, stream)
+    row_of = np.repeat(np.arange(len(rnb)), rnb)
+    # (block, stream) byte slices: a block ends where its row's next
+    # block starts, and a row's blocks tile its stream
+    off = m[:, 3:]
+    end = np.empty_like(off)
+    end[:-1] = off[1:]
+    row_end = np.cumsum(rnb)[rnb > 0] - 1
+    end[row_end] = lens[rnb > 0]
+    ln = end - off
+    bn = m[:, 2]
+    if (
+        (ln < 0).any()
+        or (bn < 0).any()
+        or (off[row_end - rnb[rnb > 0] + 1] != 0).any()
+        or (lens[rnb == 0] != 0).any()
+        or (ln[bn == 0] != 0).any()
+    ):
+        raise CorruptSegmentError("block offsets do not tile their rows' streams")
+    lo, hi = _I64.min, _I64.max
+    scoped = min_doc is not None or max_doc is not None
+    sel = None
+    if scoped:
+        lo = lo if min_doc is None else int(min_doc)
+        hi = hi if max_doc is None else int(max_doc)
+        sel = (m[:, 1] >= lo) & (m[:, 0] <= hi)
+        if sel.all():
+            sel = None
+        else:
+            start = (np.cumsum(lens, axis=0) - lens)[row_of[sel]] + off[sel]
+            ln, bn, row_of = ln[sel], bn[sel], row_of[sel]
+    cut = np.cumsum(ln, axis=0)
+    has = bn > 0
+    last = (np.cumsum(bn) - 1)[has]
     total = int(bn.sum())
-    deltas = _decode_exact("postings", postings_seq, total)
-    tf = _decode_exact("tfs", tfs_seq, total)
-    dl = _decode_exact("dls", dls_seq, total)
-    row_lens = np.zeros(len(row_nblocks), dtype=np.int64)
+    deltas, tf, dl = (
+        _decode_stream(
+            name, seqs[j], None if sel is None else start[:, j],
+            ln[:, j], cut[:, j], has, last, total,
+        )
+        for j, name in enumerate(("postings", "tfs", "dls"))
+    )
     if not total:
-        return row_lens, deltas.view(np.int64), tf, dl
+        return np.zeros(len(rnb), dtype=np.int64), deltas.view(np.int64), tf, dl
     # segmented cumsum: absolute value at every block start
     starts = np.concatenate(([0], np.cumsum(bn[:-1])))
     csum = np.cumsum(deltas, dtype=np.uint64)
     base = csum[starts] - deltas[starts]
     docs = (csum - np.repeat(base, bn)).view(np.int64)
-    # per-row posting counts = sum of its blocks' n (vectorized)
-    rnb = np.asarray(row_nblocks, dtype=np.int64)
-    nz = np.flatnonzero(rnb)
-    first_block = np.concatenate(([0], np.cumsum(rnb)))[:-1]
-    row_lens[nz] = np.add.reduceat(bn, first_block[nz])
-    return row_lens, docs, tf, dl
+    post_row = np.repeat(row_of, bn)
+    if scoped:
+        keep = (docs >= lo) & (docs <= hi)
+        if not keep.all():
+            docs, tf, dl, post_row = docs[keep], tf[keep], dl[keep], post_row[keep]
+    return np.bincount(post_row, minlength=len(rnb)), docs, tf, dl
 
 
-def _decode_exact(name: str, seq, total: int) -> np.ndarray:
-    """One stream kind's concatenated varints, exactly ``total`` of them."""
-    buf = np.frombuffer(b"".join(seq), dtype=np.uint8)
-    # a final byte with its continuation bit set is a cut varint
-    vals = decode_varint(buf) if not len(buf) or buf[-1] < 0x80 else None
-    if vals is None or len(vals) != total:
+def _decode_stream(name, seq, start, ln, cut, has, last, total) -> np.ndarray:
+    """One stream kind's varints from its selected block slices (all of
+    its rows' bytes when ``start`` is None); block i must hold exactly
+    n[i] whole ones — its last varint ends on the slice's last byte —
+    and none may be left over."""
+    data = np.frombuffer(b"".join(seq), dtype=np.uint8)
+    if start is not None:
+        data = data[np.repeat(start - cut + ln, ln) + np.arange(int(ln.sum()))]
+    ends = np.flatnonzero(data < 0x80)
+    if len(ends) != total or (ends[last] != cut[has] - 1).any():
         raise CorruptSegmentError(
-            f"{name} streams do not hold the {total} postings their blocks declare"
+            f"{name} streams do not hold the postings their blocks declare"
         )
-    return vals
-
-
-def decode_postings(
-    postings: bytes,
-    tfs: bytes,
-    dls: bytes,
-    blocks: list,
-    min_doc: int | None = None,
-    max_doc: int | None = None,
-) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
-    """Decode a term's postings, pruning blocks outside [min_doc, max_doc].
-
-    blocks may be dicts or pyspark Rows with BLOCK_FIELDS. Returns
-    (doc_ids, tfs, dls) as uint64 arrays, already range-filtered.
-    """
-    if blocks is None or len(blocks) == 0:
-        z = np.zeros(0, dtype=np.uint64)
-        return z, z, z
-    # range semantics are SIGNED int64 — negative ids (the wrapped
-    # uint64 upper half used by unsigned value indexes) compare like
-    # the Spark long schema they live in
-    lo = np.iinfo(np.int64).min if min_doc is None else min_doc
-    hi = np.iinfo(np.int64).max if max_doc is None else max_doc
-    p = np.frombuffer(postings, dtype=np.uint8)
-    t = np.frombuffer(tfs, dtype=np.uint8)
-    l = np.frombuffer(dls, dtype=np.uint8)
-    nb = len(blocks)
-    doc_parts, tf_parts, dl_parts = [], [], []
-    for i, b in enumerate(blocks):
-        if b["last_doc"] < lo or b["first_doc"] > hi:
-            continue
-        n_b = b["n"]
-        nxt = blocks[i + 1] if i + 1 < nb else None
-        p_end = nxt["p_off"] if nxt else len(p)
-        t_end = nxt["t_off"] if nxt else len(t)
-        d_end = nxt["d_off"] if nxt else len(l)
-        deltas = decode_varint(p[b["p_off"] : p_end])[:n_b]
-        docs = np.cumsum(deltas, dtype=np.uint64)
-        doc_parts.append(docs)
-        tf_parts.append(decode_varint(t[b["t_off"] : t_end])[:n_b])
-        dl_parts.append(decode_varint(l[b["d_off"] : d_end])[:n_b])
-    if not doc_parts:
-        z = np.zeros(0, dtype=np.uint64)
-        return z, z, z
-    d = np.concatenate(doc_parts)
-    tf = np.concatenate(tf_parts)
-    dl = np.concatenate(dl_parts)
-    if min_doc is not None or max_doc is not None:
-        dv = d.view(np.int64)
-        m = (dv >= np.int64(lo)) & (dv <= np.int64(hi))
-        d, tf, dl = d[m], tf[m], dl[m]
-    return d, tf, dl
+    return _varints(data, ends)

@@ -21,11 +21,7 @@ import pandas as pd
 from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
-from inverted_index_spark.functions.codec import (
-    DEFAULT_BLOCK,
-    decode_postings,
-    decode_rows_concat,
-)
+from inverted_index_spark.functions.codec import DEFAULT_BLOCK, decode_rows_concat
 from inverted_index_spark.operators.build import encode_bucket_arrays
 from inverted_index_spark.sources.store import (
     POSTINGS_SCHEMA,
@@ -77,10 +73,9 @@ def _merge_bucket_pdf(
     if not len(pdf):
         return passthrough
     scoped = dels is not None and len(dels) and "_sgen" in pdf.columns
-    # batched decode (round-6): ONE varint pass per stream over the
-    # whole bucket instead of a per-row decode_postings call — on
-    # fragment segments (tens of thousands of tiny rows per bucket)
-    # the per-row fixed overhead was 80% of the merge kernel, measured
+    # ONE decode for the whole bucket: on fragment segments (tens of
+    # thousands of tiny rows per bucket) a per-row decode's fixed
+    # overhead was 80% of the merge kernel, measured
     row_lens, docs, tfs_a, dls_a = decode_rows_concat(
         pdf["postings"], pdf["tfs"], pdf["dls"], pdf["blocks"]
     )

@@ -21,11 +21,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from inverted_index_spark.functions.codec import (
-    CorruptSegmentError,
-    decode_postings,
-    decode_rows_concat,
-)
+from inverted_index_spark.functions.codec import decode_rows_concat
 from inverted_index_spark.sources.store import SegmentStore
 
 
@@ -35,60 +31,28 @@ def _decode_rows(
     max_doc: int | None,
     with_tf: bool,
 ) -> Iterator[pd.DataFrame]:
-    """Segment rows → exploded (term, doc_id[, tf, dl]) with block pruning.
+    """Segment rows → exploded (term, doc_id[, tf, dl]) with block
+    pruning: one range-scoped decode per Arrow batch.
 
     A ``_sgen`` provenance column (scan-class generation, present when
     the scan ran ``with_gen=True`` on a store with live deletes) rides
     through to every exploded row — store.scoped_minus_deletes consumes
     it downstream."""
-    full = min_doc is None and max_doc is None
     for pdf in batches:
-        outs = []
-        has_gen = "_sgen" in pdf.columns
-        gens = pdf["_sgen"] if has_gen else None
-        if full and len(pdf):
-            # batched decode (round-6): one varint pass per stream over
-            # the whole Arrow batch — per-row decode overhead dominated
-            # on many-small-row scans (fragment segments, whole-index
-            # reads). Range-scoped reads keep the block-pruned per-row
-            # path below. Falls through on a stream-length mismatch.
-            try:
-                dec = decode_rows_concat(
-                    pdf["postings"], pdf["tfs"], pdf["dls"], pdf["blocks"]
-                )
-            except CorruptSegmentError:
-                dec = None
-            if dec is not None:
-                row_lens, docs, tf_a, dl_a = dec
-                if len(docs):
-                    cols = {
-                        "term": np.repeat(pdf["term"].to_numpy(), row_lens),
-                        "doc_id": docs,
-                    }
-                    if with_tf:
-                        cols["tf"] = tf_a.astype(np.int64)
-                        cols["dl"] = dl_a.astype(np.int64)
-                    if has_gen:
-                        cols["_sgen"] = np.repeat(
-                            gens.to_numpy(np.int64), row_lens
-                        )
-                    yield pd.DataFrame(cols)
-                continue
-        for i, (term, p, t, l, blocks) in enumerate(
-            zip(pdf["term"], pdf["postings"], pdf["tfs"], pdf["dls"], pdf["blocks"])
-        ):
-            d, tf, dl = decode_postings(p, t, l, blocks, min_doc, max_doc)
-            if not len(d):
-                continue
-            cols = {"term": np.repeat(term, len(d)), "doc_id": d.astype(np.int64)}
-            if with_tf:
-                cols["tf"] = tf.astype(np.int64)
-                cols["dl"] = dl.astype(np.int64)
-            if has_gen:
-                cols["_sgen"] = np.repeat(np.int64(gens.iloc[i]), len(d))
-            outs.append(pd.DataFrame(cols))
-        if outs:
-            yield pd.concat(outs, ignore_index=True)
+        if not len(pdf):
+            continue
+        row_lens, docs, tf_a, dl_a = decode_rows_concat(
+            pdf["postings"], pdf["tfs"], pdf["dls"], pdf["blocks"], min_doc, max_doc
+        )
+        if not len(docs):
+            continue
+        cols = {"term": np.repeat(pdf["term"].to_numpy(), row_lens), "doc_id": docs}
+        if with_tf:
+            cols["tf"] = tf_a.astype(np.int64)
+            cols["dl"] = dl_a.astype(np.int64)
+        if "_sgen" in pdf.columns:
+            cols["_sgen"] = np.repeat(pdf["_sgen"].to_numpy(np.int64), row_lens)
+        yield pd.DataFrame(cols)
 
 
 _SQL_SAFE_MAX_ISIN = 32
@@ -634,49 +598,41 @@ def _bucket_setop_rows(
     only — never the exploded postings. Cross-segment duplicate
     (term, doc) rows are deduped in-kernel (np.unique), preserving M4
     semantics pre-compaction."""
-
-    def run(pdf: pd.DataFrame) -> pd.DataFrame:
-        empty = pd.DataFrame({"doc_id": pd.Series(dtype="int64")})
-        if not len(pdf):
-            return empty
-        codes, uniq = pd.factorize(pdf["term"])
-        if need_all is not None and len(uniq) < need_all:
-            return empty  # a query term absent from this bucket
-        if min_doc is None and max_doc is None:
-            # batched decode: one varint pass per stream for the bucket
-            row_lens, docs, _, _ = decode_rows_concat(
-                pdf["postings"], pdf["tfs"], pdf["dls"], pdf["blocks"]
-            )
-            code_rep = np.repeat(codes.astype(np.int64), row_lens)
-        else:
-            # range-scoped: per-row block-pruned decode
-            c_parts, d_parts = [], []
-            for i, (p, t, l, blocks) in enumerate(zip(
-                pdf["postings"], pdf["tfs"], pdf["dls"], pdf["blocks"]
-            )):
-                d, _, _ = decode_postings(p, t, l, blocks, min_doc, max_doc)
-                if len(d):
-                    d_parts.append(d.view(np.int64))
-                    c_parts.append(np.full(len(d), codes[i], dtype=np.int64))
-            if not d_parts:
-                return empty
-            docs = np.concatenate(d_parts)
-            code_rep = np.concatenate(c_parts)
-        if not len(docs):
-            return empty
-        if need_all is None:
-            return pd.DataFrame({"doc_id": np.unique(docs)})
-        # dedup (term, doc) pairs across segments, then k-of-k count
-        order = np.lexsort((docs, code_rep))
-        d2, c2 = docs[order], code_rep[order]
-        keep = np.ones(len(d2), dtype=bool)
-        keep[1:] = (c2[1:] != c2[:-1]) | (d2[1:] != d2[:-1])
-        vals, counts = np.unique(d2[keep], return_counts=True)
-        return pd.DataFrame({"doc_id": vals[counts == need_all]})
-
     return rows.groupBy("bucket").applyInPandas(
-        lambda _k, pdf: run(pdf), schema="doc_id long"
+        lambda _k, pdf: _setop_bucket(pdf, min_doc, max_doc, need_all),
+        schema="doc_id long",
     )
+
+
+def _setop_bucket(
+    pdf: pd.DataFrame,
+    min_doc: int | None,
+    max_doc: int | None,
+    need_all: int | None,
+) -> pd.DataFrame:
+    """:func:`_bucket_setop_rows`' kernel: one doc-bucket's matched
+    rows → its union or k-way intersection doc ids."""
+    empty = pd.DataFrame({"doc_id": pd.Series(dtype="int64")})
+    if not len(pdf):
+        return empty
+    codes, uniq = pd.factorize(pdf["term"])
+    if need_all is not None and len(uniq) < need_all:
+        return empty  # a query term absent from this bucket
+    row_lens, docs, _, _ = decode_rows_concat(
+        pdf["postings"], pdf["tfs"], pdf["dls"], pdf["blocks"], min_doc, max_doc
+    )
+    if not len(docs):
+        return empty
+    if need_all is None:
+        return pd.DataFrame({"doc_id": np.unique(docs)})
+    # dedup (term, doc) pairs across segments, then k-of-k count
+    code_rep = np.repeat(codes.astype(np.int64), row_lens)
+    order = np.lexsort((docs, code_rep))
+    d2, c2 = docs[order], code_rep[order]
+    keep = np.ones(len(d2), dtype=bool)
+    keep[1:] = (c2[1:] != c2[:-1]) | (d2[1:] != d2[:-1])
+    vals, counts = np.unique(d2[keep], return_counts=True)
+    return pd.DataFrame({"doc_id": vals[counts == need_all]})
 
 
 def and_values(

@@ -16,6 +16,11 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from inverted_index_spark.functions.codec import (
+    DEFAULT_BLOCK,
+    decode_rows_concat,
+    encode_postings,
+)
 from inverted_index_spark.operators import bm25 as _bm25
 from inverted_index_spark.operators import wand as _wand
 from inverted_index_spark.operators.query import _decode_rows
@@ -88,14 +93,6 @@ def _purged_postings(spark: SparkSession, store: SegmentStore, raw: DataFrame) -
     co-partitioned equi-join on bucket (NOT a broadcast — a 100 TB
     corpus can carry billions of tombstones); rows in buckets with no
     deletes pass through without decoding."""
-    import numpy as np
-    import pandas as pd
-
-    from inverted_index_spark.functions.codec import (
-        DEFAULT_BLOCK,
-        decode_postings,
-        encode_postings,
-    )
     from inverted_index_spark.sources.store import POSTINGS_SCHEMA
 
     bs = store.pinned_bucket_size()
@@ -117,63 +114,107 @@ def _purged_postings(spark: SparkSession, store: SegmentStore, raw: DataFrame) -
             ).alias("dels_arr")
         )
     )
-    # itertuples drops underscore-prefixed names → rename for the kernel
-    joined = raw.withColumnRenamed("_sgen", "sgen").join(dmap, "bucket", "left")
+    joined = raw.join(dmap, "bucket", "left")
     cols = list(POSTINGS_SCHEMA.fieldNames())
 
     def run(batches):
         for pdf in batches:
-            outs = []
-            hit = pdf["dels_arr"].notna()
-            clean = pdf[~hit]
-            if len(clean):
-                outs.append(clean[cols])
-            for row in pdf[hit].itertuples(index=False):
-                # struct array sorted by doc_id (first struct field)
-                dels = np.asarray([s["doc_id"] for s in row.dels_arr], np.int64)
-                gens = np.asarray([s["del_gen"] for s in row.dels_arr], np.int64)
-                # scope: only tombstones NEWER than this row's segment
-                # apply; prune to the row's doc envelope
-                lo = int(np.searchsorted(dels, row.min_doc, "left"))
-                hi = int(np.searchsorted(dels, row.max_doc, "right"))
-                sub = dels[lo:hi][gens[lo:hi] > np.int64(row.sgen)]
-                if row.df == 0 or not len(sub):
-                    # empty-postings term registration, or no overlap
-                    outs.append(pd.DataFrame([{c: getattr(row, c) for c in cols}]))
-                    continue
-                d, tf, dl = decode_postings(
-                    row.postings, row.tfs, row.dls, list(row.blocks)
-                )
-                di = d.view(np.int64)
-                mask = ~np.isin(di, sub)
-                if mask.all():
-                    outs.append(pd.DataFrame([{c: getattr(row, c) for c in cols}]))
-                    continue
-                if not mask.any():
-                    continue  # every doc deleted → drop the term row
-                d2, tf2, dl2 = di[mask], tf[mask], dl[mask]
-                p2, t2, l2, blocks2 = encode_postings(
-                    d2, tf2, dl2, block_size=DEFAULT_BLOCK
-                )
-                outs.append(
-                    pd.DataFrame(
-                        [{
-                            "bucket": row.bucket,
-                            "term": row.term,
-                            "df": len(d2),
-                            "postings": p2,
-                            "tfs": t2,
-                            "dls": l2,
-                            "blocks": blocks2,
-                            "min_doc": int(d2[0]),
-                            "max_doc": int(d2[-1]),
-                        }]
-                    )
-                )
-            if outs:
-                yield pd.concat(outs, ignore_index=True)
+            out = _purge_batch(pdf, cols)
+            if len(out):
+                yield out
 
     return joined.mapInPandas(run, schema=POSTINGS_SCHEMA)
+
+
+def _purge_batch(pdf: pd.DataFrame, cols: list[str]) -> pd.DataFrame:
+    """:func:`_purged_postings`' kernel: one batch of posting rows, each
+    joined with its bucket's tombstones (``dels_arr``, sorted by
+    doc_id, null for a bucket without any) → the rows with every
+    tombstoned posting removed. Rows no tombstone applies to pass
+    through undecoded; the rest decode in one call."""
+    # df = 0 rows are empty-postings term registrations
+    cand = (pdf["dels_arr"].notna() & (pdf["df"] > 0)).to_numpy()
+    keep = ~cand
+    hit_pos, hit_dels = [], []
+    rows = pdf[cand]
+    for pos, dels_arr, sgen, lo_doc, hi_doc in zip(
+        np.flatnonzero(cand), rows["dels_arr"], rows["_sgen"], rows["min_doc"],
+        rows["max_doc"],
+    ):
+        dels = np.asarray([x["doc_id"] for x in dels_arr], np.int64)
+        gens = np.asarray([x["del_gen"] for x in dels_arr], np.int64)
+        # scope: only tombstones NEWER than this row's segment apply;
+        # prune to the row's doc envelope
+        a = int(np.searchsorted(dels, lo_doc, "left"))
+        b = int(np.searchsorted(dels, hi_doc, "right"))
+        sub = dels[a:b][gens[a:b] > np.int64(sgen)]
+        if len(sub):
+            hit_pos.append(pos)
+            hit_dels.append(sub)
+        else:
+            keep[pos] = True
+    hit = pdf.iloc[hit_pos]
+    row_lens, docs, tfs, dls = decode_rows_concat(
+        hit["postings"], hit["tfs"], hit["dls"], hit["blocks"]
+    )
+    bounds = np.concatenate(([0], np.cumsum(row_lens)))
+    rewritten = []
+    for j, sub in enumerate(hit_dels):
+        row = slice(bounds[j], bounds[j + 1])
+        alive = ~np.isin(docs[row], sub)
+        if alive.all():
+            keep[hit_pos[j]] = True
+        elif alive.any():  # else every doc is deleted: drop the term row
+            d2 = docs[row][alive]
+            p2, t2, l2, blocks2 = encode_postings(
+                d2, tfs[row][alive], dls[row][alive], block_size=DEFAULT_BLOCK
+            )
+            rewritten.append({
+                "bucket": hit["bucket"].iloc[j],
+                "term": hit["term"].iloc[j],
+                "df": len(d2),
+                "postings": p2,
+                "tfs": t2,
+                "dls": l2,
+                "blocks": blocks2,
+                "min_doc": int(d2[0]),
+                "max_doc": int(d2[-1]),
+            })
+    out = pdf[keep][cols]
+    if rewritten:
+        out = pd.concat([out, pd.DataFrame(rewritten, columns=cols)], ignore_index=True)
+    return out
+
+
+def _read_values_batch_rows(
+    pdf: pd.DataFrame, qmap: dict, term_qids: dict, g_lo, g_hi
+) -> pd.DataFrame:
+    """:meth:`Searcher.read_values_batch`' kernel: one batch of matched
+    rows → (qid, doc_id) for every query naming the row's term. One
+    decode scoped to the batch's widest range, then per-query range
+    slicing by binary search on each row's sorted doc ids."""
+    pdf = pdf[pdf["term"].isin(list(term_qids))]
+    row_lens, docs, _, _ = decode_rows_concat(
+        pdf["postings"], pdf["tfs"], pdf["dls"], pdf["blocks"], g_lo, g_hi
+    )
+    bounds = np.concatenate(([0], np.cumsum(row_lens)))
+    out_qid, out_doc = [], []
+    for i, term in enumerate(pdf["term"]):
+        d = docs[bounds[i] : bounds[i + 1]]
+        if not len(d):
+            continue
+        for qid in term_qids[term]:
+            _, lo, hi = qmap[qid]
+            a = 0 if lo is None else int(np.searchsorted(d, lo, "left"))
+            b = len(d) if hi is None else int(np.searchsorted(d, hi, "right"))
+            if a < b:
+                out_qid.append(np.repeat(qid, b - a))
+                out_doc.append(d[a:b])
+    if not out_qid:
+        return pd.DataFrame(columns=["qid", "doc_id"])
+    return pd.DataFrame(
+        {"qid": np.concatenate(out_qid), "doc_id": np.concatenate(out_doc)}
+    )
 
 
 class Searcher:
@@ -502,11 +543,6 @@ class Searcher:
         amortization shape as :meth:`topk_batch` — one pass over the
         union of matched postings, each block decoded at most once for
         the whole batch, per-query range slicing via binary search."""
-        import numpy as np
-        import pandas as pd
-
-        from inverted_index_spark.functions.codec import decode_postings
-
         qmap = {
             qid: (sorted(set(ts)), lo, hi) for qid, (ts, lo, hi) in queries.items() if ts
         }
@@ -536,31 +572,9 @@ class Searcher:
         def run(batches):
             _qmap, _term_qids = bc.value if bc is not None else payload
             for pdf in batches:
-                out_qid, out_doc = [], []
-                for term, p, t, l, blocks in zip(
-                    pdf["term"], pdf["postings"], pdf["tfs"], pdf["dls"], pdf["blocks"]
-                ):
-                    qids = _term_qids.get(term)
-                    if not qids:
-                        continue
-                    d, _, _ = decode_postings(p, t, l, blocks, g_lo, g_hi)
-                    if not len(d):
-                        continue
-                    for qid in qids:
-                        _, lo, hi = _qmap[qid]
-                        a = 0 if lo is None else int(np.searchsorted(d, lo, "left"))
-                        b = len(d) if hi is None else int(np.searchsorted(d, hi, "right"))
-                        if a == b:
-                            continue
-                        out_qid.append(np.repeat(qid, b - a))
-                        out_doc.append(d[a:b])
-                if out_qid:
-                    yield pd.DataFrame(
-                        {
-                            "qid": np.concatenate(out_qid),
-                            "doc_id": np.concatenate(out_doc).astype(np.int64),
-                        }
-                    )
+                out = _read_values_batch_rows(pdf, _qmap, _term_qids, g_lo, g_hi)
+                if len(out):
+                    yield out
 
         decoded = rows.mapInPandas(run, schema="qid string, doc_id long")
         return decoded.distinct().orderBy("qid", "doc_id")
@@ -700,47 +714,34 @@ class Searcher:
                 run, schema="doc_id long, score double"
             )
             return local.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
-        # exhaustive path with MAP-SIDE PARTIAL AGGREGATION: scores are
-        # computed and pre-summed per doc inside the Arrow batch, so
-        # only ≤(distinct docs per batch) small rows hit the shuffle —
-        # never the exploded postings. Buckets are disjoint doc ranges,
-        # so partial sums per doc are always combinable.
-        def score_batches(batches):
-            for pdf in batches:
-                contribs = _wand._materialized_contributions(pdf, idf_map, avgdl)
-                if contribs:
-                    ts = sorted(contribs)
-                    d = np.concatenate([contribs[t][0] for t in ts])
-                    c = np.concatenate([contribs[t][1] for t in ts])
-                    uniq, inv = np.unique(d, return_inverse=True)
-                    sums = np.bincount(inv, weights=c, minlength=len(uniq))
-                    yield pd.DataFrame({"doc_id": uniq, "score": sums})
+        def score(pdf: pd.DataFrame) -> pd.DataFrame:
+            contribs = _wand._materialized_contributions(pdf, idf_map, avgdl)
+            ts = sorted(contribs)
+            d = np.concatenate([np.zeros(0, np.int64)] + [contribs[t][0] for t in ts])
+            c = np.concatenate([np.zeros(0)] + [contribs[t][1] for t in ts])
+            uniq, inv = np.unique(d, return_inverse=True)
+            sums = np.bincount(inv, weights=c, minlength=len(uniq))
+            return pd.DataFrame({"doc_id": uniq, "score": sums})
 
-        partial = rows.mapInPandas(score_batches, schema="doc_id long, score double")
-        if not self._single_segment:
-            # pre-compaction overlap: fall back to exact dedup path
-            decoded = rows.mapInPandas(
-                lambda it: _decode_rows(it, None, None, True),
-                schema="term string, doc_id long, tf long, dl long",
-            ).dropDuplicates(["term", "doc_id"])
-            idf_expr = F.create_map(
-                *[x for t, w in idf_map.items() for x in (F.lit(t), F.lit(float(w)))]
+        if self._single_segment:
+            # MAP-SIDE PARTIAL AGGREGATION: scores are computed and
+            # pre-summed per doc inside the Arrow batch, so only
+            # ≤(distinct docs per batch) small rows hit the shuffle —
+            # never the exploded postings. Buckets are disjoint doc
+            # ranges, so partial sums per doc are always combinable.
+            partial = (
+                rows.mapInPandas(
+                    lambda it: map(score, it), schema="doc_id long, score double"
+                )
+                .groupBy("doc_id")
+                .agg(F.sum("score").alias("score"))
             )
-            partial = decoded.select(
-                "doc_id",
-                (
-                    idf_expr[F.col("term")]
-                    * F.col("tf")
-                    / (
-                        F.col("tf")
-                        + _bm25.K1
-                        * (1 - _bm25.B + _bm25.B * F.col("dl") / F.lit(float(avgdl)))
-                    )
-                ).alias("score"),
+        else:
+            # pre-compaction overlap: one (term, doc) posting may sit in
+            # several segments' rows. Grouping by bucket hands them all
+            # to one kernel call, whose keep-first merge (the one WAND
+            # applies) counts it once; each doc's score is then final.
+            partial = rows.groupBy("bucket").applyInPandas(
+                score, schema="doc_id long, score double"
             )
-        return (
-            partial.groupBy("doc_id")
-            .agg(F.sum("score").alias("score"))
-            .orderBy(F.desc("score"), F.asc("doc_id"))
-            .limit(k)
-        )
+        return partial.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)

@@ -32,7 +32,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from inverted_index_spark.functions.codec import decode_postings, decode_varint
+from inverted_index_spark.functions.codec import decode_rows_concat
 from inverted_index_spark.operators.bm25 import B, K1, corpus_stats, idf, term_dfs
 from inverted_index_spark.operators.query import matching_rows
 from inverted_index_spark.sources.store import SegmentStore
@@ -45,34 +45,24 @@ def _tf_norm(tf, dl, avgdl):
 class _BlockHandle:
     """Lazy posting block: bounds + WAND stats now, decode on demand."""
 
-    __slots__ = ("first_doc", "last_doc", "max_tf", "min_dl", "n", "_src", "_cache")
+    __slots__ = ("first_doc", "last_doc", "max_tf", "min_dl", "n", "_row", "_cache")
 
-    def __init__(self, first_doc, last_doc, max_tf, min_dl, n, src):
+    def __init__(self, first_doc, last_doc, max_tf, min_dl, n, row=None, cache=None):
         self.first_doc = first_doc
         self.last_doc = last_doc
         self.max_tf = max_tf
         self.min_dl = min_dl
         self.n = n  # posting count (adaptive exhaustive-fallback sizing)
-        self._src = src  # (postings, tfs, dls, blocks, bi) | (docs, tfs, dls)
-        self._cache = None
+        self._row = row  # (postings, tfs, dls, blocks) of its encoded row
+        self._cache = cache  # (docs, tfs, dls), int64
 
     def decode(self):
         if self._cache is None:
-            if len(self._src) == 3:  # pre-materialized (overlap-merged)
-                self._cache = self._src
-            else:
-                p, t, l, blocks, bi = self._src
-                b = blocks[bi]
-                nxt = blocks[bi + 1] if bi + 1 < len(blocks) else None
-                n = b["n"]
-                pb = np.frombuffer(p, np.uint8)
-                tb = np.frombuffer(t, np.uint8)
-                lb = np.frombuffer(l, np.uint8)
-                deltas = decode_varint(pb[b["p_off"]: nxt["p_off"] if nxt else len(pb)])[:n]
-                docs = np.cumsum(deltas, dtype=np.uint64).astype(np.int64)
-                tfs = decode_varint(tb[b["t_off"]: nxt["t_off"] if nxt else len(tb)])[:n].astype(np.int64)
-                dls = decode_varint(lb[b["d_off"]: nxt["d_off"] if nxt else len(lb)])[:n].astype(np.int64)
-                self._cache = (docs, tfs, dls)
+            p, t, l, blocks = self._row
+            _, docs, tfs, dls = decode_rows_concat(
+                [p], [t], [l], [blocks], self.first_doc, self.last_doc
+            )
+            self._cache = (docs, tfs.astype(np.int64), dls.astype(np.int64))
         return self._cache
 
 
@@ -82,21 +72,18 @@ def _term_handles(grp: pd.DataFrame) -> list[_BlockHandle]:
     materialized chunks so no (term, doc) pair ever double-counts."""
     if len(grp) == 1:
         r = grp.iloc[0]
-        blocks = list(r["blocks"])
+        row = (r["postings"], r["tfs"], r["dls"], r["blocks"])
         return [
             _BlockHandle(
-                b["first_doc"], b["last_doc"], b["max_tf"], b["min_dl"], b["n"],
-                (r["postings"], r["tfs"], r["dls"], blocks, bi),
+                b["first_doc"], b["last_doc"], b["max_tf"], b["min_dl"], b["n"], row
             )
-            for bi, b in enumerate(blocks)
+            for b in r["blocks"]
         ]
-    parts = [
-        decode_postings(r["postings"], r["tfs"], r["dls"], list(r["blocks"]))
-        for _, r in grp.iterrows()
-    ]
-    d = np.concatenate([p[0] for p in parts]).astype(np.int64)
-    tf = np.concatenate([p[1] for p in parts]).astype(np.int64)
-    dl = np.concatenate([p[2] for p in parts]).astype(np.int64)
+    _, d, tf, dl = decode_rows_concat(
+        grp["postings"], grp["tfs"], grp["dls"], grp["blocks"]
+    )
+    tf = tf.astype(np.int64)
+    dl = dl.astype(np.int64)
     order = np.argsort(d, kind="mergesort")
     d, tf, dl = d[order], tf[order], dl[order]
     keep = np.ones(len(d), dtype=bool)
@@ -108,7 +95,7 @@ def _term_handles(grp: pd.DataFrame) -> list[_BlockHandle]:
         out.append(
             _BlockHandle(
                 int(d[s]), int(d[e - 1]), int(tf[s:e].max()), int(dl[s:e].min()),
-                int(e - s), (d[s:e], tf[s:e], dl[s:e]),
+                int(e - s), cache=(d[s:e], tf[s:e], dl[s:e]),
             )
         )
     return out
@@ -130,8 +117,6 @@ def _materialized_contributions(
     path: contributions are idf · tf/(tf + k1·(1−b+b·dl/avgdl)) in
     float64, docs ascending within a term, cross-segment duplicate
     rows merged doc-sorted keep-first exactly like _term_handles."""
-    from inverted_index_spark.functions.codec import decode_rows_concat
-
     row_lens, docs, tf, dl = decode_rows_concat(
         pdf["postings"], pdf["tfs"], pdf["dls"], pdf["blocks"]
     )

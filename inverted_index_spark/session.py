@@ -7,7 +7,24 @@ on, Arrow on, UTC timezone pinned for oracle comparison).
 
 from __future__ import annotations
 
+import os
+import site
+from pathlib import Path
+
 from pyspark.sql import SparkSession
+
+_PKG_ROOT = Path(__file__).resolve().parent.parent
+
+
+def _worker_imports_package() -> bool:
+    """Can a Python process the JVM starts import this package? Spark
+    starts its worker daemon in the JVM's working directory (the
+    driver's, locally) with PYTHONPATH holding only Spark's own
+    archives, so: the package sits in the working directory, or in
+    site-packages. Not when it came from a ``--py-files`` zip."""
+    return _PKG_ROOT == Path(os.getcwd()).resolve() or any(
+        _PKG_ROOT == Path(p).resolve() for p in site.getsitepackages()
+    )
 
 
 def get_spark(
@@ -43,6 +60,11 @@ def get_spark(
         .config("spark.ui.enabled", "false")
         .config("spark.driver.memory", "16g")
     )
+    if _worker_imports_package():
+        # skip each Python task's ~130 ms re-read of pyspark.zip
+        builder = builder.config(
+            "spark.python.daemon.module", "inverted_index_spark.worker_daemon"
+        )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     return builder.getOrCreate()

@@ -9,11 +9,17 @@ from hypothesis import given, settings
 from hypothesis import strategies as st
 
 from inverted_index_spark.functions.codec import (
-    decode_postings,
+    decode_rows_concat,
     decode_varint,
     encode_postings,
     encode_varint,
 )
+
+
+def _decode(p, t, l, blocks, min_doc=None, max_doc=None):
+    """One row through the batched primitive → (doc_ids, tfs, dls)."""
+    _, docs, tfs, dls = decode_rows_concat([p], [t], [l], [blocks], min_doc, max_doc)
+    return docs, tfs, dls
 
 
 @settings(max_examples=60, deadline=None)
@@ -48,16 +54,36 @@ def test_postings_roundtrip_property(docs, block_size, data):
         dtype=np.uint64,
     )
     p, t, l, blocks = encode_postings(d, tfs, dls, block_size=block_size)
-    rd, rt, rl = decode_postings(p, t, l, blocks)
+    rd, rt, rl = _decode(p, t, l, blocks)
     np.testing.assert_array_equal(rd, d)
     np.testing.assert_array_equal(rt, tfs)
     np.testing.assert_array_equal(rl, dls)
     # range pruning never returns out-of-range docs and never loses in-range ones
     if n >= 2:
         lo, hi = int(d[n // 3]), int(d[2 * n // 3])
-        pd_, _, _ = decode_postings(p, t, l, blocks, lo, hi)
+        pd_, _, _ = _decode(p, t, l, blocks, lo, hi)
         expect = d[(d >= lo) & (d <= hi)]
         np.testing.assert_array_equal(pd_, expect)
+        # several rows in one call: the row itself, an empty row, its
+        # first half re-encoded at another block size, and a copy
+        # shifted past the range — per-row counts and the concatenated
+        # output both match row-at-a-time filtering
+        half = encode_postings(
+            d[: n // 2], tfs[: n // 2], dls[: n // 2], block_size=block_size + 1
+        )
+        shift = 2 * int(d[-1]) + 1
+        far = encode_postings(d + np.uint64(shift), tfs, dls, block_size=block_size)
+        rows = [(p, t, l, blocks), (b"", b"", b"", []), half, far]
+        row_lens, docs, rtf, rdl = decode_rows_concat(*zip(*rows), lo, hi)
+        src = [(d, tfs, dls), (d[:0], tfs[:0], dls[:0]),
+               (d[: n // 2], tfs[: n // 2], dls[: n // 2]),
+               (d + np.uint64(shift), tfs, dls)]
+        masks = [(x >= lo) & (x <= hi) for x, _, _ in src]
+        assert list(row_lens) == [int(m.sum()) for m in masks]
+        for out, j in ((docs, 0), (rtf, 1), (rdl, 2)):
+            np.testing.assert_array_equal(
+                out, np.concatenate([s[j][m] for s, m in zip(src, masks)])
+            )
 
 
 # ---------------------------------------------------- positions codec ---
@@ -113,13 +139,13 @@ def test_postings_roundtrip_signed_full_domain(docs, block_size):
     n = len(d)
     ones = np.ones(n, dtype=np.uint64)
     p, t, l, blocks = encode_postings(d, ones, ones, block_size=block_size)
-    rd, _, _ = decode_postings(p, t, l, blocks)
+    rd, _, _ = _decode(p, t, l, blocks)
     np.testing.assert_array_equal(rd.view(np.int64), d)
     assert blocks[0]["first_doc"] == int(d[0])
     assert blocks[-1]["last_doc"] == int(d[-1])
     if n >= 2:
         lo, hi = int(d[n // 3]), int(d[2 * n // 3])
-        pd_, _, _ = decode_postings(p, t, l, blocks, lo, hi)
+        pd_, _, _ = _decode(p, t, l, blocks, lo, hi)
         expect = d[(d >= lo) & (d <= hi)]
         np.testing.assert_array_equal(pd_.view(np.int64), expect)
 
@@ -131,8 +157,8 @@ def test_postings_uint64_max_boundary():
     )
     ones = np.ones(len(d), dtype=np.uint64)
     p, t, l, blocks = encode_postings(d, ones, ones, block_size=2)
-    rd, _, _ = decode_postings(p, t, l, blocks)
+    rd, _, _ = _decode(p, t, l, blocks)
     np.testing.assert_array_equal(rd.view(np.int64), d)
     # signed range read spanning the boundary
-    pd_, _, _ = decode_postings(p, t, l, blocks, -2, 1)
+    pd_, _, _ = _decode(p, t, l, blocks, -2, 1)
     np.testing.assert_array_equal(pd_.view(np.int64), [-2, -1, 0, 1])

@@ -292,17 +292,21 @@ def test_searcher_refresh_after_delete(spark, tmp_path):
 def test_purged_postings_codec_roundtrip(spark, tmp_path):
     """The open-time purge re-encodes posting rows; surviving ids, tf,
     dl must round-trip bit-exactly vs a numpy reference mask."""
-    from inverted_index_spark.functions.codec import decode_postings
+    from inverted_index_spark.functions.codec import decode_rows_concat
     from inverted_index_spark.operators.search import _purged_postings
+
+    def decode_row(r):
+        _, docs, tfs, dls = decode_rows_concat(
+            [r["postings"]], [r["tfs"]], [r["dls"]], [r["blocks"]]
+        )
+        return docs, tfs, dls
 
     store, _ = _build(spark, tmp_path / "idx", n=300)
     raw = store.read_postings(spark)
     row = (
         raw.where(F.col("df") >= 20).orderBy(F.desc("df")).limit(1).collect()[0]
     )
-    d, tf, dl = decode_postings(
-        row["postings"], row["tfs"], row["dls"], row["blocks"]
-    )
+    d, tf, dl = decode_row(row)
     victims = [int(x) for x in d.view(np.int64)[::3]]
     store.delete_docs(spark, victims)
     purged = _purged_postings(
@@ -311,9 +315,7 @@ def test_purged_postings_codec_roundtrip(spark, tmp_path):
     prow = purged.where(
         (F.col("term") == row["term"]) & (F.col("bucket") == row["bucket"])
     ).collect()[0]
-    pd_, ptf, pdl = decode_postings(
-        prow["postings"], prow["tfs"], prow["dls"], prow["blocks"]
-    )
+    pd_, ptf, pdl = decode_row(prow)
     mask = ~np.isin(d.view(np.int64), np.array(sorted(victims), dtype=np.int64))
     np.testing.assert_array_equal(pd_.view(np.int64), d.view(np.int64)[mask])
     np.testing.assert_array_equal(ptf, tf[mask])

@@ -7,7 +7,7 @@ from __future__ import annotations
 import pytest
 
 from inverted_index_spark.operators.bm25 import bm25_topk
-from inverted_index_spark.operators.build import build_index
+from inverted_index_spark.operators.build import SegmentWriter, build_index
 from inverted_index_spark.operators.query import read_values
 from inverted_index_spark.operators.search import Searcher
 from inverted_index_spark.sources.store import SegmentStore
@@ -31,9 +31,30 @@ QUERIES = [
 ]
 
 
-@pytest.mark.parametrize("terms", QUERIES)
-def test_searcher_topk_matches_oneshot(spark, setup, terms):
-    store, searcher = setup
+@pytest.fixture(scope="module")
+def two_segments(spark, tmp_path_factory):
+    """Two un-merged segments that both hold the postings (a, 6) and
+    (b, 7): the pre-compaction overlap a search must count once."""
+    store = SegmentStore(str(tmp_path_factory.mktemp("searcher2") / "idx"))
+    for postings in (
+        {"a": range(0, 400, 3), "b": [5, 7, 300], "c": range(1, 400, 7)},
+        {"a": [6, 401, 402], "b": [7, 403]},
+    ):
+        w = SegmentWriter(spark, store, bucket_size=128, block_size=16)
+        for term, docs in postings.items():
+            w.put(term, list(docs))
+        w.close()
+    assert len(store.live_segments()) == 2
+    return store, Searcher(spark, store).open()
+
+
+@pytest.mark.parametrize(
+    "store_fx, terms",
+    [pytest.param("setup", q, id=f"terms{i}") for i, q in enumerate(QUERIES)]
+    + [pytest.param("two_segments", ["a", "b", "c"], id="two_segments")],
+)
+def test_searcher_topk_matches_oneshot(spark, request, store_fx, terms):
+    store, searcher = request.getfixturevalue(store_fx)
     oneshot = [
         (r["doc_id"], round(r["score"], 10))
         for r in bm25_topk(spark, store, terms, 10).collect()
