@@ -1152,7 +1152,7 @@ def _del_store_for(spark, sf):
 def _q_delete_read_values(spark, sf):
     """R10 read over a store with live tombstones (store path, no
     Searcher): deleted docs vanish from results immediately —
-    delete_docs semantics, sources/store.py scoped_minus_deletes."""
+    delete_docs semantics, sources/store.py apply_buckets."""
     return _query.read_values(spark, _del_store_for(spark, sf), OR_TERMS)
 
 

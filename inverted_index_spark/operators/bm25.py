@@ -23,7 +23,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from inverted_index_spark.operators.query import matching_rows, postings_df
+from inverted_index_spark.operators.query import matching_rows, postings_df, term_df_table
 from inverted_index_spark.sources.store import SegmentStore
 
 K1 = 1.2
@@ -48,23 +48,10 @@ def term_dfs(
 ) -> dict[str, int]:
     """Global doc-frequency per query term. Segment rows carry df per
     (segment, bucket, term); buckets are disjoint, but distinct
-    segments may overlap pre-compaction → count decoded distinct docs
-    only when >1 live segment, else sum the metadata (cheap path)."""
-    live = store.live_segments()
-    if len(live) <= 1 and not store.has_deletes():
-        rows = (
-            matching_rows(spark, store, terms)
-            .groupBy("term")
-            .agg(F.sum("df").alias("df"))
-            .collect()
-        )
-        return {r["term"]: int(r["df"]) for r in rows}
-    rows = (
-        postings_df(spark, store, terms, with_tf=False)
-        .groupBy("term")
-        .agg(F.countDistinct("doc_id").alias("df"))
-        .collect()
-    )
+    segments may overlap pre-compaction and tombstones shrink df →
+    count decoded distinct live docs unless the store says the
+    metadata sum is exact (SegmentStore.df_exact — the cheap path)."""
+    rows = term_df_table(spark, store, matching_rows(spark, store, terms)).collect()
     return {r["term"]: int(r["df"]) for r in rows}
 
 

@@ -16,6 +16,10 @@ merging never changes read_terms/read_values/BM25 results.
 
 from __future__ import annotations
 
+import os
+import shutil
+import threading
+
 import numpy as np
 import pandas as pd
 from pyspark.sql import SparkSession
@@ -24,20 +28,20 @@ from pyspark.sql import functions as F
 from inverted_index_spark.functions.codec import DEFAULT_BLOCK, decode_rows_concat
 from inverted_index_spark.operators.build import encode_bucket_arrays
 from inverted_index_spark.sources.store import (
+    NO_TOMBS,
     POSTINGS_SCHEMA,
     ErrMergeConflict,
     SegmentStore,
+    apply_buckets,
     dir_bytes,
     new_segment_id,
+    tombstoned,
 )
 
 
 def _merge_bucket_pdf(
-    pdf: pd.DataFrame,
-    block_size: int,
-    dels: np.ndarray | None = None,
-    del_gens: np.ndarray | None = None,
-) -> pd.DataFrame | None:
+    pdf: pd.DataFrame, block_size: int, tomb: pd.DataFrame = NO_TOMBS
+) -> pd.DataFrame:
     """One doc-bucket's rows across input segments → one re-encoded row
     per term. Decode all rows into term-repeated arrays, sort-unique
     per (term, doc) keeping the first (tf, dl) (duplicates are the same
@@ -51,28 +55,20 @@ def _merge_bucket_pdf(
     of decoded — merging must never drop a registered term (the
     merge-invariance contract on read_terms).
 
-    ``dels``/``del_gens`` (doc_ids with each one's max live batch
-    generation) physically purge tombstoned docs from the rewrite with
-    GENERATION SCOPING: a tombstone only masks rows whose source
-    segment (the scan's ``_sgen`` column) predates it, so a reindexed
-    doc's new postings survive while every stale copy vanishes — the
-    purge must run per source row, BEFORE the cross-segment dedup
-    could arbitrarily keep a stale copy. A term whose postings all
-    pointed at deleted docs drops from the dictionary ("as-if-
-    rebuilt"; explicit df=0 registrations survive)."""
-    if not len(pdf):
-        return None
-    bucket = int(pdf["bucket"].iloc[0])
-    empty = pdf[pdf["df"] == 0]
+    ``tomb`` (the bucket's live tombstones, store.apply_buckets)
+    physically purges tombstoned docs from the rewrite with GENERATION
+    SCOPING (store.tombstoned): a reindexed doc's new postings survive
+    while every stale copy vanishes — the purge runs per source row,
+    BEFORE the cross-segment dedup could arbitrarily keep a stale copy.
+    A term whose postings all pointed at deleted docs drops from the
+    dictionary ("as-if-rebuilt"; explicit df=0 registrations
+    survive)."""
+    cols = list(POSTINGS_SCHEMA.fieldNames())
+    passthrough = pdf[pdf["df"] == 0].drop_duplicates(subset=["term"])[cols]
     pdf = pdf[pdf["df"] > 0]
-    passthrough = None
-    if len(empty):
-        passthrough = empty.drop_duplicates(subset=["term"])[
-            list(POSTINGS_SCHEMA.fieldNames())
-        ]
     if not len(pdf):
         return passthrough
-    scoped = dels is not None and len(dels) and "_sgen" in pdf.columns
+    bucket = int(pdf["bucket"].iloc[0])
     # ONE decode for the whole bucket: on fragment segments (tens of
     # thousands of tiny rows per bucket) a per-row decode's fixed
     # overhead was 80% of the merge kernel, measured
@@ -82,19 +78,11 @@ def _merge_bucket_pdf(
     terms_rep = np.repeat(pdf["term"].to_numpy(), row_lens)
     tfs_a = tfs_a.astype(np.int64)
     dls_a = dls_a.astype(np.int64)
-    if scoped:
-        # generation scoping, vectorized per distinct source gen: a
-        # tombstone only masks postings whose segment predates it
-        sgen_rep = np.repeat(pdf["_sgen"].to_numpy(np.int64), row_lens)
-        alive = np.ones(len(docs), dtype=bool)
-        for g in np.unique(sgen_rep):
-            sub = dels[del_gens > g]
-            if len(sub):
-                m = sgen_rep == g
-                alive[m] &= ~np.isin(docs[m], sub)
-        if not alive.all():
-            terms_rep = terms_rep[alive]
-            docs, tfs_a, dls_a = docs[alive], tfs_a[alive], dls_a[alive]
+    dead = tombstoned(pdf, row_lens, docs, tomb)
+    if dead is not None:
+        alive = ~dead
+        terms_rep = terms_rep[alive]
+        docs, tfs_a, dls_a = docs[alive], tfs_a[alive], dls_a[alive]
     if not len(docs):
         return passthrough
     flat = pd.DataFrame(
@@ -113,9 +101,7 @@ def _merge_bucket_pdf(
     keep[1:] = ~((terms[1:] == terms[:-1]) & (docs[1:] == docs[:-1]))
     terms, docs, tfs, dls = terms[keep], docs[keep], tfs[keep], dls[keep]
     out = encode_bucket_arrays(terms, docs, tfs, dls, bucket, block_size)
-    if passthrough is not None:
-        out = pd.concat([out, passthrough], ignore_index=True)
-    return out
+    return pd.concat([out, passthrough], ignore_index=True) if len(passthrough) else out
 
 
 def merge_segments(
@@ -134,49 +120,13 @@ def merge_segments(
 
     del_rows = store.live_deletes()
     del_ids = list(del_rows["segment_id"]) if len(del_rows) else []
-    if del_ids:
-        if not bucket_size:
-            raise ValueError(
-                "store has live deletes but no pinned bucket_size — "
-                "cannot purge tombstones during merge"
-            )
-        # with_gen scan: each victim row carries its _sgen so the purge
-        # is generation-scoped (a reindexed victim's new rows survive
-        # tombstones that only cover its older siblings)
-        seg = store.read_postings(spark, victims, with_gen=True)
-        # per-bucket cogroup (co-partitioned, NOT broadcast): each
-        # bucket's rewrite sees exactly its slice of the delete set
-        dmap = store.read_deletes(spark, with_gen=True).select(
-            F.expr(f"cast(doc_id div {int(bucket_size)} as long)").alias("bucket"),
-            "doc_id",
-            "del_gen",
-        )
-
-        def mrg_del(left: pd.DataFrame, right: pd.DataFrame) -> pd.DataFrame:
-            if len(right):
-                order = np.argsort(right["doc_id"].to_numpy(np.int64))
-                dd = right["doc_id"].to_numpy(np.int64)[order]
-                dg = right["del_gen"].to_numpy(np.int64)[order]
-            else:
-                dd = dg = None
-            out = _merge_bucket_pdf(left, block_size, dd, dg)
-            return (
-                out if out is not None
-                else left.iloc[0:0][list(POSTINGS_SCHEMA.fieldNames())]
-            )
-
-        merged = (
-            seg.groupBy("bucket")
-            .cogroup(dmap.groupBy("bucket"))
-            .applyInPandas(lambda l, r: mrg_del(l, r), schema=POSTINGS_SCHEMA)
-        )
-    else:
-        seg = store.read_postings(spark, victims)
-
-        def mrg(pdf: pd.DataFrame) -> pd.DataFrame:
-            return _merge_bucket_pdf(pdf, block_size)
-
-        merged = seg.groupBy("bucket").applyInPandas(mrg, schema=POSTINGS_SCHEMA)
+    # one plan: the victims' rows grouped by bucket, each bucket's live
+    # tombstones purged in the rewrite kernel (apply_buckets)
+    merged = apply_buckets(
+        spark, store, store.read_postings(spark, victims),
+        lambda pdf, tomb: _merge_bucket_pdf(pdf, block_size, tomb),
+        POSTINGS_SCHEMA,
+    )
     segment_id = new_segment_id()
     seg_dir = store.seg_dir(segment_id)
     # groupBy(bucket) already partitioned the output by bucket
@@ -203,9 +153,6 @@ def merge_segments(
     docstats_df = store.read_docstats(spark, victims).observe(
         d_obs, F.count("*").alias("n_docs"), F.sum("dl").alias("sum_dl")
     )
-    import os
-    import threading
-
     errs: list[BaseException] = []
 
     def _write(df, dest: str, options: dict | None = None) -> None:
@@ -254,28 +201,36 @@ def merge_segments(
                 ),
             )
         )
-    for t in writers:
-        t.start()
     # positional artifact (operators.positions): carried through the
     # compaction when the victims have it (raises on MIXED coverage —
     # silently dropping positions would break phrase_match post-merge).
-    # Runs on the caller thread so its coverage validation raises here,
-    # concurrent with the threaded writes above.
+    # Runs on the caller thread, concurrent with the threaded writes.
     from inverted_index_spark.operators.positions import merge_positions
 
     try:
-        merge_positions(spark, store, victims, segment_id)
-    finally:
-        # never leave writer threads racing a caller's error cleanup
         for t in writers:
-            t.join()
-    if errs:
-        raise errs[0]
-    n_terms = (
-        spark.read.parquet(f"{seg_dir}/postings")
-        .agg(F.countDistinct("term").alias("n_terms"))
-        .collect()[0]["n_terms"]
-    )
+            t.start()
+        try:
+            merge_positions(spark, store, victims, segment_id)
+        finally:
+            # never leave writer threads racing the cleanup below
+            for t in writers:
+                t.join()
+        if errs:
+            raise errs[0]
+        n_terms = (
+            spark.read.parquet(f"{seg_dir}/postings")
+            .agg(F.countDistinct("term").alias("n_terms"))
+            .collect()[0]["n_terms"]
+        )
+    except BaseException as e:
+        # nothing was committed: leave no half-written segment behind,
+        # and keep every writer's error on the one that propagates
+        shutil.rmtree(seg_dir, ignore_errors=True)
+        for w in errs:
+            if w is not e:
+                e.add_note(f"merge writer thread failed: {type(w).__name__}: {w}")
+        raise
     agg = dict(obs.get)
     agg["n_terms"] = n_terms
     dstats = d_obs.get
@@ -313,8 +268,6 @@ def merge_segments(
         # our victims (the winner's merged segment covers those docs),
         # or a delete batch landed mid-merge (re-running the merge
         # picks it up). Discard the orphan output either way.
-        import shutil
-
         shutil.rmtree(seg_dir, ignore_errors=True)
         return None
     return segment_id

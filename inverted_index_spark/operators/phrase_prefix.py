@@ -74,9 +74,7 @@ def match_phrase_prefix(
             offs[e].append(last)
 
     uniq = sorted(offs)
-    rows = read_positions(
-        spark, store, with_gen=store.has_deletes()
-    ).where(F.col("term").isin(uniq))
+    rows = read_positions(spark, store).where(F.col("term").isin(uniq))
     if min_doc is not None:
         rows = rows.where(F.col("max_doc") >= F.lit(int(min_doc)))
     if max_doc is not None:

@@ -68,17 +68,9 @@ _VOCAB_MEMO: dict[tuple[str, int], int] = {}
 def _vocab_size(spark: SparkSession, store: SegmentStore) -> int:
     key = (str(store.root), store.current_generation())
     if key not in _VOCAB_MEMO:
-        if store.has_deletes():
-            from inverted_index_spark.operators.query import postings_df
+        from inverted_index_spark.operators.query import term_df_table
 
-            n = (
-                postings_df(spark, store, None, with_tf=False)
-                .select("term")
-                .distinct()
-                .count()
-            )
-        else:
-            n = store.read_postings(spark).select("term").distinct().count()
+        n = term_df_table(spark, store, store.read_postings(spark)).count()
         _VOCAB_MEMO[key] = int(n)
     return _VOCAB_MEMO[key]
 
@@ -121,7 +113,7 @@ def phrase_suggest(
         return spark.createDataFrame([], "suggestion string, score double")
     cand_list = sorted(all_cands)
     # --- one pruned occurrence scan feeds ctf AND adjacency counts ---
-    rows = read_positions(spark, store, with_gen=store.has_deletes()).where(
+    rows = read_positions(spark, store).where(
         F.col("term").isin(cand_list)
     )
     occ = decoded_occurrences(spark, store, rows).localCheckpoint()

@@ -18,21 +18,21 @@ Layout — one row per (bucket, term), three varint streams:
     positions token offsets, delta-encoded within each doc
               (absolute at each doc's first occurrence)
 
-Phrase match is pure dataflow (no per-doc iteration): decode →
-``(doc_id, pos - phrase_offset, phrase_offset)`` rows → a doc/position
-where ALL k phrase offsets land is a phrase start:
-
-    groupBy(doc_id, adj).having(count(distinct off) == k)
-
-One shuffle, keyed on (doc_id, adj), sized by the matched terms'
-occurrence count only — the same cost shape as Lucene's positional
-intersection, embarrassingly parallel at 100 TB.
+Phrase match is bucket-local: buckets partition the doc space, so
+the matched terms' ENCODED rows are grouped by doc-bucket (one small
+exchange of varint streams, sized by the matched terms only) and one
+numpy kernel per bucket decodes them, masks the bucket's live
+tombstones (store.apply_buckets), fans each occurrence out to its
+phrase offsets as ``adj = pos - offset`` and counts the starts where
+all k offsets land (:func:`sloppy_start_counts`; slop 0 is exact
+adjacency). Only ``(doc_id, n_matches)`` leaves the Python worker —
+the same cost shape as Lucene's positional intersection,
+embarrassingly parallel at 100 TB.
 """
 
 from __future__ import annotations
 
 import os
-from collections.abc import Iterator
 
 import numpy as np
 import pandas as pd
@@ -40,9 +40,18 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from inverted_index_spark.functions.codec import decode_varint, encode_varint
+from inverted_index_spark.functions.codec import (
+    CorruptSegmentError,
+    decode_varint,
+    encode_varint,
+)
 from inverted_index_spark.functions.tokenizer import tokens_expr
-from inverted_index_spark.sources.store import SegmentStore
+from inverted_index_spark.sources.store import (
+    NO_TOMBS,
+    SegmentStore,
+    apply_buckets,
+    tombstoned,
+)
 
 POSITIONS_SCHEMA = T.StructType(
     [
@@ -166,86 +175,94 @@ def encode_positions_segment(
 # ----------------------------------------------------------------- decode ---
 
 
-def _decode_pos_row(
-    d_buf, c_buf, p_buf, min_doc: int | None, max_doc: int | None
-) -> tuple[np.ndarray, np.ndarray] | None:
-    """One POSITIONS_SCHEMA row's streams → (doc_id, pos) occurrence
-    arrays, doc-range-filtered; None when nothing survives."""
-    d = np.cumsum(decode_varint(d_buf), dtype=np.uint64).astype(np.int64)
-    if not len(d):
-        return None
-    c = decode_varint(c_buf).astype(np.int64)
-    pdeltas = decode_varint(p_buf)
-    # positions: global cumsum minus each doc-group's carried-in base
-    starts = np.concatenate(([0], np.cumsum(c[:-1])))
-    csum = np.cumsum(pdeltas, dtype=np.uint64)
-    base = csum[starts] - pdeltas[starts]
-    pos = (csum - np.repeat(base, c)).astype(np.int64)
-    doc_rep = np.repeat(d, c)
+def _strict_varints(buf, name: str) -> np.ndarray:
+    """One positions stream's varints; a cut final varint raises."""
+    b = np.frombuffer(buf, dtype=np.uint8)
+    if len(b) and b[-1] >= 0x80:
+        raise CorruptSegmentError(f"positions row: {name} stream ends mid-varint")
+    return decode_varint(b)
+
+
+def _decode_pos_rows(
+    pdf: pd.DataFrame, tomb: pd.DataFrame, min_doc: int | None, max_doc: int | None
+) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
+    """POSITIONS_SCHEMA rows → (row index, doc_id, pos) per occurrence,
+    doc-range-filtered, minus the rows' tombstoned docs
+    (store.tombstoned). Strict: a row whose docs and counts streams
+    differ in length, whose counts do not sum to its positions count,
+    or whose stream ends mid-varint raises CorruptSegmentError."""
     lo = -(1 << 62) if min_doc is None else int(min_doc)
     hi = (1 << 62) if max_doc is None else int(max_doc)
-    m = (doc_rep >= lo) & (doc_rep <= hi)
-    if not m.any():
-        return None
-    if not m.all():
-        doc_rep, pos = doc_rep[m], pos[m]
-    return doc_rep, pos
+    rows, docs, poss = [], [], []
+    for i, (d_buf, c_buf, p_buf) in enumerate(
+        zip(pdf["docs"], pdf["counts"], pdf["positions"])
+    ):
+        d = np.cumsum(_strict_varints(d_buf, "docs"), dtype=np.uint64).astype(np.int64)
+        c = _strict_varints(c_buf, "counts").astype(np.int64)
+        pdeltas = _strict_varints(p_buf, "positions")
+        if len(d) != len(c) or int(c.sum()) != len(pdeltas):
+            raise CorruptSegmentError(
+                f"positions row: {len(d)} docs, {len(c)} counts summing to "
+                f"{int(c.sum())}, {len(pdeltas)} positions"
+            )
+        if not len(d):
+            continue
+        # positions: global cumsum minus each doc-group's carried-in base
+        starts = np.concatenate(([0], np.cumsum(c[:-1])))
+        csum = np.cumsum(pdeltas, dtype=np.uint64)
+        base = csum[starts] - pdeltas[starts]
+        pos = (csum - np.repeat(base, c)).astype(np.int64)
+        doc_rep = np.repeat(d, c)
+        m = (doc_rep >= lo) & (doc_rep <= hi)
+        rows.append(np.full(int(m.sum()), i, dtype=np.int64))
+        docs.append(doc_rep[m])
+        poss.append(pos[m])
+    if not rows:
+        z = np.zeros(0, dtype=np.int64)
+        return z, z, z
+    row, doc, pos = np.concatenate(rows), np.concatenate(docs), np.concatenate(poss)
+    dead = tombstoned(pdf, np.bincount(row, minlength=len(pdf)), doc, tomb)
+    if dead is not None:
+        row, doc, pos = row[~dead], doc[~dead], pos[~dead]
+    return row, doc, pos
 
 
 def decode_position_rows(
-    batches: Iterator[pd.DataFrame],
+    pdf: pd.DataFrame,
+    tomb: pd.DataFrame = NO_TOMBS,
     min_doc: int | None = None,
     max_doc: int | None = None,
-) -> Iterator[pd.DataFrame]:
-    """POSITIONS_SCHEMA rows → exploded (term, doc_id, pos) occurrences.
-    A ``_sgen`` provenance column (scan-class generation, present when
-    the scan ran with_gen=True) rides through to every occurrence —
-    store.scoped_minus_deletes consumes it downstream."""
-    for pdf in batches:
-        outs = []
-        has_gen = "_sgen" in pdf.columns
-        gens = pdf["_sgen"] if has_gen else None
-        for i, (term, d_buf, c_buf, p_buf) in enumerate(zip(
-            pdf["term"], pdf["docs"], pdf["counts"], pdf["positions"]
-        )):
-            dec = _decode_pos_row(d_buf, c_buf, p_buf, min_doc, max_doc)
-            if dec is None:
-                continue
-            doc_rep, pos = dec
-            cols = {
-                "term": np.repeat(np.asarray(term, dtype=object), len(doc_rep)),
-                "doc_id": doc_rep,
-                "pos": pos,
-            }
-            if has_gen:
-                cols["_sgen"] = np.repeat(np.int64(gens.iloc[i]), len(doc_rep))
-            outs.append(pd.DataFrame(cols))
-        if outs:
-            yield pd.concat(outs, ignore_index=True)
+) -> pd.DataFrame:
+    """POSITIONS_SCHEMA rows → exploded (term, doc_id, pos) live
+    occurrences (a store.apply_buckets row kernel)."""
+    row, doc, pos = _decode_pos_rows(pdf, tomb, min_doc, max_doc)
+    return pd.DataFrame(
+        {"term": pdf["term"].to_numpy()[row], "doc_id": doc, "pos": pos}
+    )
 
 
 def _per_term_occurrences(
-    pdf: pd.DataFrame, min_doc: int | None, max_doc: int | None
+    pdf: pd.DataFrame,
+    min_doc: int | None,
+    max_doc: int | None,
+    tomb: pd.DataFrame = NO_TOMBS,
 ) -> dict[str, tuple[np.ndarray, np.ndarray]]:
     """One doc-bucket's ENCODED position rows → per-term (doc, pos)
-    occurrence arrays, deduped across segments (pre-compaction overlap
-    can repeat a (term, doc, pos) row; duplicates must never reach a
-    counting kernel). Building block of the bucket-local phrase /
-    proximity kernels (round-6)."""
-    per_term: dict[str, list] = {}
-    for term, d_buf, c_buf, p_buf in zip(
-        pdf["term"], pdf["docs"], pdf["counts"], pdf["positions"]
-    ):
-        dec = _decode_pos_row(d_buf, c_buf, p_buf, min_doc, max_doc)
-        if dec is not None:
-            per_term.setdefault(term, []).append(dec)
+    live occurrence arrays, deduped across segments (pre-compaction
+    overlap can repeat a (term, doc, pos) row; duplicates must never
+    reach a counting kernel). Building block of the bucket-local
+    phrase / proximity kernels."""
+    row, doc, pos = _decode_pos_rows(pdf, tomb, min_doc, max_doc)
+    codes, uniq = pd.factorize(pdf["term"])
+    n_rows = np.bincount(codes, minlength=len(uniq))
+    tid = codes[row]
     out: dict[str, tuple[np.ndarray, np.ndarray]] = {}
-    for term, parts in per_term.items():
-        if len(parts) == 1:
-            d, p = parts[0]
-        else:
-            d = np.concatenate([x[0] for x in parts])
-            p = np.concatenate([x[1] for x in parts])
+    for j, term in enumerate(uniq):
+        m = tid == j
+        if not m.any():
+            continue
+        d, p = doc[m], pos[m]
+        if n_rows[j] > 1:
             order = np.lexsort((p, d))
             d, p = d[order], p[order]
             keep = np.ones(len(d), dtype=bool)
@@ -266,28 +283,18 @@ def read_positions(
     spark: SparkSession,
     store: SegmentStore,
     segment_ids: list[str] | None = None,
-    with_gen: bool = False,
 ) -> DataFrame:
-    """Multi-segment scan of the positions datasets (M3/M4 analog).
+    """Multi-segment scan of the positions datasets (M3/M4 analog);
+    rows carry ``_sgen`` exactly when deletes are live
+    (SegmentStore.scan).
 
     Every live segment must carry positions — a partial positional
     index would silently return incomplete phrase matches, so missing
-    datasets raise instead.
-
-    ``with_gen`` adds the ``_sgen`` scan-class generation (a literal
-    per class scan, same shape as store.read_postings) so decoded
-    occurrences can be delete-filtered with generation scoping."""
+    datasets raise instead."""
     live = store.live_segments()
     ids = list(segment_ids or live["segment_id"])
     if not ids:
-        schema = POSITIONS_SCHEMA
-        if with_gen:
-            from pyspark.sql import types as T
-
-            schema = T.StructType(
-                list(POSITIONS_SCHEMA.fields) + [T.StructField("_sgen", T.LongType())]
-            )
-        return spark.createDataFrame([], schema)
+        return spark.createDataFrame([], POSITIONS_SCHEMA)
     missing = [s for s in ids if not os.path.isdir(positions_dir(store, s))]
     if missing:
         raise ValueError(
@@ -295,18 +302,7 @@ def read_positions(
             "build_index(..., positions=True) (phrase results would be "
             "incomplete otherwise)"
         )
-    if with_gen:
-        parts = []
-        for cls_ids, rep in store.delete_scan_classes(ids):
-            parts.append(
-                spark.read.parquet(*[positions_dir(store, s) for s in cls_ids])
-                .withColumn("_sgen", F.lit(int(rep)))
-            )
-        df = parts[0]
-        for p in parts[1:]:
-            df = df.unionByName(p)
-        return df
-    return spark.read.parquet(*[positions_dir(store, s) for s in ids])
+    return store.scan(spark, "positions", ids)
 
 
 def decoded_occurrences(
@@ -317,25 +313,18 @@ def decoded_occurrences(
     max_doc: int | None = None,
 ) -> DataFrame:
     """Decode a positions scan into (term, doc_id, pos) occurrences,
-    delete-filtered BEFORE any phrase/proximity kernel sees them.
+    tombstones masked BEFORE any phrase/proximity kernel sees them.
 
-    Scoped semantics (store.read_deletes): when ``rows`` carries
-    ``_sgen`` (a with_gen=True scan), occurrences from segments OLDER
-    than a tombstone are dropped while a reindexed doc's NEW positions
-    survive — stale-copy rows must never reach a kernel, where they
-    would manufacture phantom matches. Without deletes this is exactly
-    the plain decode."""
-    scoped = "_sgen" in rows.columns
-    occ = rows.mapInPandas(
-        lambda b: decode_position_rows(b, min_doc, max_doc),
-        schema="term string, doc_id long, pos long"
-        + (", _sgen long" if scoped else ""),
+    Scoped semantics (store.tombstoned): occurrences from segments
+    OLDER than a tombstone are dropped while a reindexed doc's NEW
+    positions survive — stale-copy rows must never reach a kernel,
+    where they would manufacture phantom matches. Without deletes this
+    is exactly the plain mapInPandas decode."""
+    return apply_buckets(
+        spark, store, rows,
+        lambda pdf, tomb: decode_position_rows(pdf, tomb, min_doc, max_doc),
+        "term string, doc_id long, pos long", rowwise=True,
     )
-    if scoped:
-        from inverted_index_spark.sources.store import scoped_minus_deletes
-
-        occ = scoped_minus_deletes(spark, store, occ)
-    return occ
 
 
 def merge_positions(
@@ -359,9 +348,7 @@ def merge_positions(
     # generation scoping — a reindexed doc's NEW positions (segment
     # newer than its tombstone batch) survive the rewrite (the
     # postings purge in merge._merge_bucket_pdf applies the same rule)
-    rows = read_positions(
-        spark, store, victims, with_gen=store.has_deletes()
-    )
+    rows = read_positions(spark, store, victims)
     occurrences = decoded_occurrences(spark, store, rows)
     bucket_size = store.pinned_bucket_size()
     if bucket_size is None:
@@ -412,11 +399,7 @@ def phrase_match(
     fans out once per phrase offset that term occupies). Empty phrase →
     empty result; any phrase term absent from the index → no matches.
     """
-    rows = (
-        read_positions(spark, store, with_gen=store.has_deletes())
-        if phrase
-        else None
-    )
+    rows = read_positions(spark, store) if phrase else None
     return phrase_match_rows(
         spark, rows, phrase, min_doc, max_doc, slop, store=store
     )
@@ -466,138 +449,72 @@ def phrase_match_rows(
     store: SegmentStore | None = None,
 ) -> DataFrame:
     """phrase_match over an explicit POSITIONS_SCHEMA DataFrame — the
-    building block Searcher.phrase uses with its cached scan. ``store``
-    enables the generation-scoped delete filter when the rows carry
-    ``_sgen`` provenance (a with_gen scan); the filter runs on decoded
-    occurrences BEFORE the kernels, so a reindexed doc's stale
-    positions can never manufacture phantom matches."""
+    building block Searcher.phrase uses with its cached scan. Rows
+    carrying ``_sgen`` (a scan with live deletes) are cogrouped with
+    ``store``'s tombstones, which :func:`_phrase_bucket` masks right
+    after decoding, so a reindexed doc's stale positions can never
+    manufacture phantom matches."""
     if not phrase:
         return spark.createDataFrame([], "doc_id long, n_matches long")
     if slop < 0:
         raise ValueError(f"slop must be >= 0, got {slop}")
-    k = len(phrase)
     uniq = sorted(set(phrase))
     rows = positions_rows.where(F.col("term").isin(uniq))
     if min_doc is not None:
         rows = rows.where(F.col("max_doc") >= F.lit(int(min_doc)))
     if max_doc is not None:
         rows = rows.where(F.col("min_doc") <= F.lit(int(max_doc)))
-    if "_sgen" not in rows.columns:
-        # bucket-local kernel (round-6, guide §2.3/§2.4): buckets
-        # partition the doc space, so phrase starts are computable per
-        # doc-bucket — group the ENCODED rows by bucket (one small
-        # exchange of varint streams) and run the fan + dedup +
-        # sloppy_start_counts kernel in numpy, emitting only (doc_id,
-        # n_matches). Replaces the exploded-occurrence plan (decode →
-        # broadcast-join offsets → two aggregate exchanges over fanned
-        # rows); slop=0 under the sloppy definition IS the adjacency
-        # semantics (property-tested), so one kernel serves both.
-        offs_map = {
-            t: [i for i, pt in enumerate(phrase) if pt == t] for t in uniq
-        }
+    offs_map = {t: [i for i, pt in enumerate(phrase) if pt == t] for t in uniq}
+    return apply_buckets(
+        spark, store, rows,
+        lambda pdf, tomb: _phrase_bucket(
+            pdf, tomb, offs_map, len(phrase), slop, min_doc, max_doc
+        ),
+        "doc_id long, n_matches long",
+    ).orderBy("doc_id")
 
-        def run_bucket(pdf: pd.DataFrame) -> pd.DataFrame:
-            empty = pd.DataFrame(
-                {
-                    "doc_id": pd.Series(dtype="int64"),
-                    "n_matches": pd.Series(dtype="int64"),
-                }
-            )
-            per_term = _per_term_occurrences(pdf, min_doc, max_doc)
-            if len(per_term) < len(offs_map):
-                return empty  # a phrase term absent from this bucket
-            d_parts, a_parts, o_parts = [], [], []
-            for term, (d, p) in per_term.items():
-                for off in offs_map[term]:
-                    adj = p - off
-                    m = adj >= 0
-                    d_parts.append(d[m])
-                    a_parts.append(adj[m])
-                    o_parts.append(np.full(int(m.sum()), off, dtype=np.int64))
-            doc = np.concatenate(d_parts)
-            if not len(doc):
-                return empty
-            adj = np.concatenate(a_parts)
-            off = np.concatenate(o_parts)
-            # per-term dedup already ran; a phrase offset maps to ONE
-            # term, so (doc, adj, off) triples are unique — sort is all
-            # sloppy_start_counts needs
-            order = np.lexsort((adj, doc))
-            d2, c2 = sloppy_start_counts(
-                doc[order], off[order], adj[order], k, slop
-            )
-            return pd.DataFrame({"doc_id": d2, "n_matches": c2})
 
-        return (
-            rows.groupBy("bucket")
-            .applyInPandas(
-                lambda _key, pdf: run_bucket(pdf),
-                schema="doc_id long, n_matches long",
-            )
-            .orderBy("doc_id")
-        )
-    if store is not None:
-        occ = decoded_occurrences(spark, store, rows, min_doc, max_doc)
-    else:
-        occ = rows.mapInPandas(
-            lambda b: decode_position_rows(b, min_doc, max_doc),
-            schema="term string, doc_id long, pos long",
-        )
-    # term → its offsets within the phrase, as an in-plan literal map
-    offsets = [(t, [i for i, pt in enumerate(phrase) if pt == t]) for t in uniq]
-    off_df = spark.createDataFrame(offsets, "term string, offs array<int>")
-    fanned = (
-        occ.join(F.broadcast(off_df), "term")
-        .select(
-            "doc_id",
-            F.explode("offs").alias("off"),
-            F.col("pos"),
-        )
-        .select("doc_id", (F.col("pos") - F.col("off")).alias("adj"), "off")
-        .where(F.col("adj") >= 0)
+def _phrase_bucket(
+    pdf: pd.DataFrame,
+    tomb: pd.DataFrame,
+    offs_map: dict[str, list[int]],
+    k: int,
+    slop: int,
+    min_doc: int | None,
+    max_doc: int | None,
+) -> pd.DataFrame:
+    """:func:`phrase_match_rows`' kernel: one doc-bucket's ENCODED
+    position rows → (doc_id, n_matches) of its live docs. Decode (with
+    cross-segment dedup and the tombstone mask), fan each occurrence
+    out to the phrase offsets its term occupies, and count starts with
+    :func:`sloppy_start_counts` — slop=0 under the sloppy definition IS
+    the adjacency semantics (property-tested), so one kernel serves
+    both."""
+    empty = pd.DataFrame(
+        {"doc_id": pd.Series(dtype="int64"), "n_matches": pd.Series(dtype="int64")}
     )
-    if slop == 0:
-        starts = (
-            fanned.groupBy("doc_id", "adj")
-            .agg(F.countDistinct("off").alias("_n"))
-            .where(F.col("_n") == k)
-        )
-        return (
-            starts.groupBy("doc_id")
-            .agg(F.count("*").alias("n_matches"))
-            .orderBy("doc_id")
-        )
-    # sloppy path: same shuffle size (matched occurrences), grouped by
-    # a coarse doc-hash key so the numpy kernel sees many docs per call
-    n_groups = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
-
-    def run(pdf: pd.DataFrame) -> pd.DataFrame:
-        if not len(pdf):
-            return pd.DataFrame(
-                {"doc_id": pd.Series(dtype="int64"), "n_matches": pd.Series(dtype="int64")}
-            )
-        # Pre-compaction stores can hold the same doc's positions in two
-        # live segments (same overlap bm25_scores dedups); duplicate
-        # (doc_id, adj, off) rows would each be counted by the kernel's
-        # np.unique(return_counts). Grouping is by hash(doc_id), so every
-        # row of a doc is in this group — pandas-side dedup is exact.
-        pdf = pdf.drop_duplicates(["doc_id", "adj", "off"])
-        pdf = pdf.sort_values(["doc_id", "adj"], kind="mergesort")
-        d, c = sloppy_start_counts(
-            pdf["doc_id"].to_numpy(np.int64),
-            pdf["off"].to_numpy(np.int64),
-            pdf["adj"].to_numpy(np.int64),
-            k,
-            slop,
-        )
-        return pd.DataFrame({"doc_id": d, "n_matches": c})
-
-    return (
-        fanned.withColumn("_g", F.pmod(F.hash("doc_id"), F.lit(n_groups)))
-        .groupBy("_g")
-        .applyInPandas(lambda _key, pdf: run(pdf), schema="doc_id long, n_matches long")
-        .orderBy("doc_id")
-    )
+    per_term = _per_term_occurrences(pdf, min_doc, max_doc, tomb)
+    if len(per_term) < len(offs_map):
+        return empty  # a phrase term absent from this bucket
+    d_parts, a_parts, o_parts = [], [], []
+    for term, (d, p) in per_term.items():
+        for off in offs_map[term]:
+            adj = p - off
+            m = adj >= 0
+            d_parts.append(d[m])
+            a_parts.append(adj[m])
+            o_parts.append(np.full(int(m.sum()), off, dtype=np.int64))
+    doc = np.concatenate(d_parts)
+    if not len(doc):
+        return empty
+    adj = np.concatenate(a_parts)
+    off = np.concatenate(o_parts)
+    # per-term dedup already ran; a phrase offset maps to ONE term, so
+    # (doc, adj, off) triples are unique — sort is all
+    # sloppy_start_counts needs
+    order = np.lexsort((adj, doc))
+    d2, c2 = sloppy_start_counts(doc[order], off[order], adj[order], k, slop)
+    return pd.DataFrame({"doc_id": d2, "n_matches": c2})
 
 
 def phrase_starts(
@@ -614,9 +531,7 @@ def phrase_starts(
         return spark.createDataFrame([], "doc_id long, pos long")
     k = len(phrase)
     uniq = sorted(set(phrase))
-    rows = read_positions(
-        spark, store, with_gen=store.has_deletes()
-    ).where(F.col("term").isin(uniq))
+    rows = read_positions(spark, store).where(F.col("term").isin(uniq))
     if min_doc is not None:
         rows = rows.where(F.col("max_doc") >= F.lit(int(min_doc)))
     if max_doc is not None:
@@ -735,9 +650,7 @@ def term_snippets(
         return spark.createDataFrame(
             [], "doc_id long, first_pos long, snippet string"
         )
-    rows = read_positions(
-        spark, store, with_gen=store.has_deletes()
-    ).where(F.col("term").isin(uniq))
+    rows = read_positions(spark, store).where(F.col("term").isin(uniq))
     occ = decoded_occurrences(spark, store, rows)
     firsts = occ.groupBy("doc_id").agg(F.min("pos").alias("first_pos"))
     texts = store.read_docs(spark).select("doc_id", "text")
@@ -765,87 +678,47 @@ def terms_within_window(
     such span. The scan is pruned to the query terms, so the shuffle is
     sized by their occurrence count — same cost envelope as
     phrase_match. The kernel (:func:`min_cover_spans`) is pure numpy
-    over MANY docs per Arrow batch — occurrences group by a coarse
-    doc-hash key, not per doc, so there is no per-doc Python call and
-    no row-at-a-time loop (round-4 fix; the brute-force itertools
-    oracle in tests/test_positions.py pins equality)."""
+    over every doc of a bucket at once — no per-doc Python call and no
+    row-at-a-time loop (the brute-force itertools oracle in
+    tests/test_positions.py pins equality)."""
     uniq = sorted(set(terms))
     if not uniq or window < 1:
         return spark.createDataFrame([], "doc_id long, min_span long")
     k = len(uniq)
     tmap = {t: i for i, t in enumerate(uniq)}
-    rows = read_positions(
-        spark, store, with_gen=store.has_deletes()
-    ).where(F.col("term").isin(uniq))
+    rows = read_positions(spark, store).where(F.col("term").isin(uniq))
     if min_doc is not None:
         rows = rows.where(F.col("max_doc") >= F.lit(int(min_doc)))
     if max_doc is not None:
         rows = rows.where(F.col("min_doc") <= F.lit(int(max_doc)))
-    if "_sgen" not in rows.columns:
-        # bucket-local span kernel (round-6, same rework as
-        # phrase_match_rows): group ENCODED rows by doc-bucket, decode
-        # + min_cover_spans in numpy, emit only qualifying (doc_id,
-        # min_span) — no exploded-occurrence shuffle. Duplicate
-        # cross-segment occurrences dedup in _per_term_occurrences
-        # (harmless to the span math, deduped anyway).
-        def run_bucket(pdf: pd.DataFrame) -> pd.DataFrame:
-            empty = pd.DataFrame(
-                {
-                    "doc_id": pd.Series(dtype="int64"),
-                    "min_span": pd.Series(dtype="int64"),
-                }
-            )
-            per_term = _per_term_occurrences(pdf, min_doc, max_doc)
-            if len(per_term) < k:
-                return empty  # a query term absent from this bucket
-            d_parts, p_parts, t_parts = [], [], []
-            for term, (d, p) in per_term.items():
-                d_parts.append(d)
-                p_parts.append(p)
-                t_parts.append(np.full(len(d), tmap[term], dtype=np.int64))
-            doc = np.concatenate(d_parts)
-            pos = np.concatenate(p_parts)
-            tid = np.concatenate(t_parts)
-            order = np.lexsort((pos, doc))
-            d2, s2 = min_cover_spans(doc[order], pos[order], tid[order], k)
-            m = s2 <= int(window)
-            return pd.DataFrame({"doc_id": d2[m], "min_span": s2[m]})
 
-        return (
-            rows.groupBy("bucket")
-            .applyInPandas(
-                lambda _key, pdf: run_bucket(pdf),
-                schema="doc_id long, min_span long",
-            )
-            .orderBy("doc_id")
+    # bucket-local span kernel (same shape as phrase_match_rows): group
+    # ENCODED rows by doc-bucket, decode (tombstones masked, cross-
+    # segment duplicates deduped) + min_cover_spans in numpy, emit only
+    # qualifying (doc_id, min_span) — no exploded-occurrence shuffle
+    def run_bucket(pdf: pd.DataFrame, tomb: pd.DataFrame) -> pd.DataFrame:
+        empty = pd.DataFrame(
+            {"doc_id": pd.Series(dtype="int64"), "min_span": pd.Series(dtype="int64")}
         )
-    # scoped delete filter BEFORE the span kernel (stale reindexed
-    # positions would otherwise distort min spans)
-    occ = decoded_occurrences(spark, store, rows, min_doc, max_doc)
-    n_groups = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
+        per_term = _per_term_occurrences(pdf, min_doc, max_doc, tomb)
+        if len(per_term) < k:
+            return empty  # a query term absent from this bucket
+        d_parts, p_parts, t_parts = [], [], []
+        for term, (d, p) in per_term.items():
+            d_parts.append(d)
+            p_parts.append(p)
+            t_parts.append(np.full(len(d), tmap[term], dtype=np.int64))
+        doc = np.concatenate(d_parts)
+        pos = np.concatenate(p_parts)
+        tid = np.concatenate(t_parts)
+        order = np.lexsort((pos, doc))
+        d2, s2 = min_cover_spans(doc[order], pos[order], tid[order], k)
+        m = s2 <= int(window)
+        return pd.DataFrame({"doc_id": d2[m], "min_span": s2[m]})
 
-    def min_window(pdf: pd.DataFrame) -> pd.DataFrame:
-        if not len(pdf):
-            return pd.DataFrame(
-                {"doc_id": pd.Series(dtype="int64"), "min_span": pd.Series(dtype="int64")}
-            )
-        pdf = pdf.sort_values(["doc_id", "pos"], kind="mergesort")
-        d, s = min_cover_spans(
-            pdf["doc_id"].to_numpy(np.int64),
-            pdf["pos"].to_numpy(np.int64),
-            pdf["term"].map(tmap).to_numpy(np.int64),
-            k,
-        )
-        return pd.DataFrame({"doc_id": d, "min_span": s})
-
-    spans = (
-        occ.withColumn("_g", F.pmod(F.hash("doc_id"), F.lit(n_groups)))
-        .groupBy("_g")
-        .applyInPandas(
-            lambda _key, pdf: min_window(pdf), schema="doc_id long, min_span long"
-        )
-    )
-    return spans.where(F.col("min_span") <= int(window)).orderBy("doc_id")
+    return apply_buckets(
+        spark, store, rows, run_bucket, "doc_id long, min_span long"
+    ).orderBy("doc_id")
 
 
 def phrase_bm25_topk(
@@ -954,9 +827,7 @@ def intervals_match(
         tmap.setdefault(t, len(tmap))
     tids = [tmap[t] for t in seq]
     uniq = sorted(tmap)
-    rows = read_positions(
-        spark, store, with_gen=store.has_deletes()
-    ).where(F.col("term").isin(uniq))
+    rows = read_positions(spark, store).where(F.col("term").isin(uniq))
     if min_doc is not None:
         rows = rows.where(F.col("max_doc") >= F.lit(int(min_doc)))
     if max_doc is not None:

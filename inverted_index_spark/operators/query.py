@@ -8,13 +8,13 @@ over any set of live segments, with cross-segment dedup (M3/M4):
 
 Plan shape (what .explain should show): one multi-segment parquet
 scan with ``term IN (...)`` pushed to the scan (term-partitioned
-row-group pruning), block-pruned decode inside an Arrow batch UDF,
-then distinct/sort — no driver-side collection anywhere.
+row-group pruning), one exchange of the ENCODED rows by doc-bucket,
+and a bucket kernel that decodes (block-pruned), masks the bucket's
+live tombstones (store.apply_buckets) and emits only result doc ids,
+then a sort — no driver-side collection anywhere.
 """
 
 from __future__ import annotations
-
-from collections.abc import Iterator
 
 import numpy as np
 import pandas as pd
@@ -22,37 +22,52 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from inverted_index_spark.functions.codec import decode_rows_concat
-from inverted_index_spark.sources.store import SegmentStore
+from inverted_index_spark.sources.store import (
+    NO_TOMBS,
+    SegmentStore,
+    apply_buckets,
+    tombstoned,
+)
 
 
 def _decode_rows(
-    batches: Iterator[pd.DataFrame],
-    min_doc: int | None,
-    max_doc: int | None,
-    with_tf: bool,
-) -> Iterator[pd.DataFrame]:
+    pdf: pd.DataFrame,
+    tomb: pd.DataFrame = NO_TOMBS,
+    min_doc: int | None = None,
+    max_doc: int | None = None,
+    with_tf: bool = False,
+) -> pd.DataFrame:
     """Segment rows → exploded (term, doc_id[, tf, dl]) with block
-    pruning: one range-scoped decode per Arrow batch.
+    pruning and the rows' tombstones masked: one range-scoped decode
+    per batch (a store.apply_buckets row kernel)."""
+    row_lens, docs, tf_a, dl_a = decode_rows_concat(
+        pdf["postings"], pdf["tfs"], pdf["dls"], pdf["blocks"], min_doc, max_doc
+    )
+    cols = {"term": np.repeat(pdf["term"].to_numpy(), row_lens), "doc_id": docs}
+    if with_tf:
+        cols["tf"] = tf_a.astype(np.int64)
+        cols["dl"] = dl_a.astype(np.int64)
+    out = pd.DataFrame(cols)
+    dead = tombstoned(pdf, row_lens, docs, tomb)
+    return out if dead is None else out[~dead]
 
-    A ``_sgen`` provenance column (scan-class generation, present when
-    the scan ran ``with_gen=True`` on a store with live deletes) rides
-    through to every exploded row — store.scoped_minus_deletes consumes
-    it downstream."""
-    for pdf in batches:
-        if not len(pdf):
-            continue
-        row_lens, docs, tf_a, dl_a = decode_rows_concat(
-            pdf["postings"], pdf["tfs"], pdf["dls"], pdf["blocks"], min_doc, max_doc
-        )
-        if not len(docs):
-            continue
-        cols = {"term": np.repeat(pdf["term"].to_numpy(), row_lens), "doc_id": docs}
-        if with_tf:
-            cols["tf"] = tf_a.astype(np.int64)
-            cols["dl"] = dl_a.astype(np.int64)
-        if "_sgen" in pdf.columns:
-            cols["_sgen"] = np.repeat(pdf["_sgen"].to_numpy(np.int64), row_lens)
-        yield pd.DataFrame(cols)
+
+def decoded_postings(
+    spark: SparkSession,
+    store: SegmentStore,
+    rows: DataFrame,
+    min_doc: int | None = None,
+    max_doc: int | None = None,
+    with_tf: bool = True,
+) -> DataFrame:
+    """Decode a postings scan into (term, doc_id[, tf, dl]) rows minus
+    the store's live deletes (generation-scoped, store.apply_buckets)."""
+    schema = "term string, doc_id long" + (", tf long, dl long" if with_tf else "")
+    return apply_buckets(
+        spark, store, rows,
+        lambda pdf, tomb: _decode_rows(pdf, tomb, min_doc, max_doc, with_tf),
+        schema, rowwise=True,
+    )
 
 
 _SQL_SAFE_MAX_ISIN = 32
@@ -89,7 +104,6 @@ def matching_rows(
     terms: list[str] | None,
     min_doc: int | None = None,
     max_doc: int | None = None,
-    with_gen: bool = False,
     term_pred=None,
 ) -> DataFrame:
     """Pruned segment rows for a term set: predicate pushdown on term
@@ -100,11 +114,10 @@ def matching_rows(
     significant-terms — doc-range pruning still applies), unless
     ``term_pred`` gives an arbitrary pushable predicate over the term
     column instead (range/prefix reads — mutually exclusive with
-    ``terms``). ``with_gen`` adds the ``_sgen`` scan-class column
-    (delete scoping); filters still push into every per-class scan."""
+    ``terms``). Filters push into every per-delete-class scan."""
     if terms is not None and term_pred is not None:
         raise ValueError("pass terms or term_pred, not both")
-    seg = store.read_postings(spark, with_gen=with_gen)
+    seg = store.read_postings(spark)
     if terms is not None:
         out = seg.where(term_in_pred("term", list(terms)))
     elif term_pred is not None:
@@ -130,28 +143,12 @@ def postings_df(
     """Decoded (term, doc_id, tf, dl) rows for a term set (range-pruned;
     ``terms=None`` decodes ALL terms, for whole-index consumers),
     minus any live deletes — every downstream read/score path is
-    delete-aware through this one filter). Deletes are generation-
-    scoped (store.read_deletes): rows decoded from a segment NEWER
-    than a tombstone survive it, which is what makes reindex (delete +
-    re-add) read correctly."""
-    dels = store.has_deletes()
-    rows = matching_rows(
-        spark, store, terms, min_doc, max_doc, with_gen=dels,
-        term_pred=term_pred,
-    )
-    schema = "term string, doc_id long" + (", tf long, dl long" if with_tf else "")
-    if dels:
-        schema += ", _sgen long"
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        return _decode_rows(batches, min_doc, max_doc, with_tf)
-
-    decoded = rows.mapInPandas(run, schema=schema)
-    if not dels:
-        return decoded
-    from inverted_index_spark.sources.store import scoped_minus_deletes
-
-    return scoped_minus_deletes(spark, store, decoded)
+    delete-aware through this one decoder. Deletes are generation-
+    scoped (store.tombstoned): rows decoded from a segment NEWER than a
+    tombstone survive it, which is what makes reindex (delete + re-add)
+    read correctly."""
+    rows = matching_rows(spark, store, terms, min_doc, max_doc, term_pred=term_pred)
+    return decoded_postings(spark, store, rows, min_doc, max_doc, with_tf)
 
 
 def read_terms(spark: SparkSession, store: SegmentStore) -> DataFrame:
@@ -173,18 +170,12 @@ def read_values(
     (single/single.go:563-568)."""
     if not terms:
         return spark.range(0).select(F.col("id").alias("doc_id"))
-    if not store.has_deletes():
-        # bucket-local union kernel (round-6): one small exchange of
-        # encoded rows + in-kernel np.unique per doc-bucket, instead of
-        # distinct+sort over the exploded (term, doc_id) stream — same
-        # sorted-unique result (buckets partition the doc space)
-        rows = matching_rows(spark, store, sorted(set(terms)), min_doc, max_doc)
-        return _bucket_setop_rows(rows, min_doc, max_doc, None).orderBy("doc_id")
-    return (
-        postings_df(spark, store, terms, min_doc, max_doc, with_tf=False)
-        .select("doc_id")
-        .distinct()
-        .orderBy("doc_id")
+    # bucket-local union kernel: one small exchange of encoded rows +
+    # in-kernel np.unique per doc-bucket (buckets partition the doc
+    # space, so the per-bucket results are disjoint)
+    rows = matching_rows(spark, store, sorted(set(terms)), min_doc, max_doc)
+    return _bucket_setop_rows(spark, store, rows, min_doc, max_doc, None).orderBy(
+        "doc_id"
     )
 
 
@@ -249,29 +240,8 @@ def complete_terms(
     the sorted term layout like read_terms_prefix; df follows
     top_terms' two branches (metadata sum on a single clean segment,
     decoded distinct docs under overlap/deletes)."""
-    if len(store.live_segments()) <= 1 and not store.has_deletes():
-        dfs = (
-            store.read_postings(spark)
-            .where(F.col("term").startswith(prefix))
-            .groupBy("term")
-            .agg(F.sum("df").alias("df"))
-        )
-    else:
-        from inverted_index_spark.sources.store import scoped_minus_deletes
-
-        dels = store.has_deletes()
-        decoded = (
-            store.read_postings(spark, with_gen=dels)
-            .where(F.col("term").startswith(prefix))
-            .mapInPandas(
-                lambda it: _decode_rows(it, None, None, False),
-                schema="term string, doc_id long"
-                + (", _sgen long" if dels else ""),
-            )
-        )
-        if dels:
-            decoded = scoped_minus_deletes(spark, store, decoded)
-        dfs = decoded.groupBy("term").agg(F.countDistinct("doc_id").alias("df"))
+    rows = store.read_postings(spark).where(F.col("term").startswith(prefix))
+    dfs = term_df_table(spark, store, rows)
     return dfs.orderBy(F.desc("df"), F.asc("term")).limit(k)
 
 
@@ -350,26 +320,7 @@ def top_terms(spark: SparkSession, store: SegmentStore, k: int = 20) -> DataFram
     ties: (df DESC, term ASC). Single segment sums the metadata df;
     overlapping segments count decoded distinct docs (same branch as
     bm25.term_dfs)."""
-    if len(store.live_segments()) <= 1 and not store.has_deletes():
-        dfs = (
-            store.read_postings(spark)
-            .groupBy("term")
-            .agg(F.sum("df").alias("df"))
-        )
-    else:
-        # overlap (or live deletes) → metadata df is stale; count
-        # decoded distinct surviving docs (scoped: reindexed copies in
-        # newer segments survive their tombstones)
-        from inverted_index_spark.sources.store import scoped_minus_deletes
-
-        dels = store.has_deletes()
-        decoded = store.read_postings(spark, with_gen=dels).mapInPandas(
-            lambda it: _decode_rows(it, None, None, False),
-            schema="term string, doc_id long" + (", _sgen long" if dels else ""),
-        )
-        if dels:
-            decoded = scoped_minus_deletes(spark, store, decoded)
-        dfs = decoded.groupBy("term").agg(F.countDistinct("doc_id").alias("df"))
+    dfs = term_df_table(spark, store, store.read_postings(spark))
     return dfs.orderBy(F.desc("df"), F.asc("term")).limit(k)
 
 
@@ -480,19 +431,8 @@ def spell_suggest(
     cand = [r["term"] for r in fuzzy_terms(spark, store, term, max_edits).collect()]
     if not cand:
         return spark.createDataFrame([], "term string, df long")
-    if len(store.live_segments()) <= 1 and not store.has_deletes():
-        dfs = (
-            store.read_postings(spark)
-            .where(F.col("term").isin(cand))
-            .groupBy("term")
-            .agg(F.sum("df").alias("df"))
-        )
-    else:
-        dfs = (
-            postings_df(spark, store, cand, with_tf=False)
-            .groupBy("term")
-            .agg(F.countDistinct("doc_id").alias("df"))
-        )
+    rows = store.read_postings(spark).where(F.col("term").isin(cand))
+    dfs = term_df_table(spark, store, rows)
     return dfs.orderBy(F.desc("df"), F.asc("term")).limit(k)
 
 
@@ -534,26 +474,12 @@ def read_values_prefix(
     """R10 semantics with a term-prefix predicate instead of a term
     list: OR-union of every term matching the prefix, range-scoped,
     sorted unique doc ids (wildcard queries à la Lucene PrefixQuery)."""
-    dels = store.has_deletes()
-    rows = store.read_postings(spark, with_gen=dels).where(
-        F.col("term").startswith(prefix)
+    rows = matching_rows(
+        spark, store, None, min_doc, max_doc, term_pred=F.col("term").startswith(prefix)
     )
-    if min_doc is not None:
-        rows = rows.where(F.col("max_doc") >= F.lit(int(min_doc)))
-    if max_doc is not None:
-        rows = rows.where(F.col("min_doc") <= F.lit(int(max_doc)))
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        return _decode_rows(batches, min_doc, max_doc, False)
-
-    decoded = rows.mapInPandas(
-        run, schema="term string, doc_id long" + (", _sgen long" if dels else "")
+    return _bucket_setop_rows(spark, store, rows, min_doc, max_doc, None).orderBy(
+        "doc_id"
     )
-    if dels:
-        from inverted_index_spark.sources.store import scoped_minus_deletes
-
-        decoded = scoped_minus_deletes(spark, store, decoded)
-    return decoded.select("doc_id").distinct().orderBy("doc_id")
 
 
 def except_values(
@@ -579,6 +505,8 @@ def except_values(
 
 
 def _bucket_setop_rows(
+    spark: SparkSession,
+    store: SegmentStore,
     rows: DataFrame,
     min_doc: int | None,
     max_doc: int | None,
@@ -597,10 +525,12 @@ def _bucket_setop_rows(
     exchanges disappear, and the Python boundary returns result ids
     only — never the exploded postings. Cross-segment duplicate
     (term, doc) rows are deduped in-kernel (np.unique), preserving M4
-    semantics pre-compaction."""
-    return rows.groupBy("bucket").applyInPandas(
-        lambda _k, pdf: _setop_bucket(pdf, min_doc, max_doc, need_all),
-        schema="doc_id long",
+    semantics pre-compaction; the bucket's live tombstones are masked
+    right after the decode (store.apply_buckets)."""
+    return apply_buckets(
+        spark, store, rows,
+        lambda pdf, tomb: _setop_bucket(pdf, min_doc, max_doc, need_all, tomb),
+        "doc_id long",
     )
 
 
@@ -609,9 +539,10 @@ def _setop_bucket(
     min_doc: int | None,
     max_doc: int | None,
     need_all: int | None,
+    tomb: pd.DataFrame = NO_TOMBS,
 ) -> pd.DataFrame:
     """:func:`_bucket_setop_rows`' kernel: one doc-bucket's matched
-    rows → its union or k-way intersection doc ids."""
+    rows → its union or k-way intersection of live doc ids."""
     empty = pd.DataFrame({"doc_id": pd.Series(dtype="int64")})
     if not len(pdf):
         return empty
@@ -621,12 +552,15 @@ def _setop_bucket(
     row_lens, docs, _, _ = decode_rows_concat(
         pdf["postings"], pdf["tfs"], pdf["dls"], pdf["blocks"], min_doc, max_doc
     )
+    code_rep = np.repeat(codes.astype(np.int64), row_lens)
+    dead = tombstoned(pdf, row_lens, docs, tomb)
+    if dead is not None:
+        docs, code_rep = docs[~dead], code_rep[~dead]
     if not len(docs):
         return empty
     if need_all is None:
         return pd.DataFrame({"doc_id": np.unique(docs)})
     # dedup (term, doc) pairs across segments, then k-of-k count
-    code_rep = np.repeat(codes.astype(np.int64), row_lens)
     order = np.lexsort((docs, code_rep))
     d2, c2 = docs[order], code_rep[order]
     keep = np.ones(len(d2), dtype=bool)
@@ -642,27 +576,29 @@ def and_values(
     min_doc: int | None = None,
     max_doc: int | None = None,
 ) -> DataFrame:
-    """North-rule extension: docs containing ALL terms.
-
-    Deletes-free stores run the bucket-local intersect kernel
-    (:func:`_bucket_setop_rows` — one small exchange of encoded rows,
-    exact k-way intersection in numpy per doc-bucket). Stores with
-    live tombstones keep the declarative groupBy(doc_id) HAVING
-    count(distinct term) == |terms| plan, whose decode path carries the
-    generation-scoped delete filter."""
+    """North-rule extension: docs containing ALL terms — the
+    bucket-local intersect kernel (:func:`_bucket_setop_rows`: one
+    small exchange of encoded rows, exact k-way intersection of live
+    docs in numpy per doc-bucket)."""
     uniq = sorted(set(terms))
     if not uniq:
         return spark.range(0).select(F.col("id").alias("doc_id"))
-    if not store.has_deletes():
-        rows = matching_rows(spark, store, uniq, min_doc, max_doc)
-        return _bucket_setop_rows(rows, min_doc, max_doc, len(uniq)).orderBy(
-            "doc_id"
-        )
+    rows = matching_rows(spark, store, uniq, min_doc, max_doc)
+    return _bucket_setop_rows(spark, store, rows, min_doc, max_doc, len(uniq)).orderBy(
+        "doc_id"
+    )
+
+
+def term_df_table(
+    spark: SparkSession, store: SegmentStore, rows: DataFrame
+) -> DataFrame:
+    """(term, df) over a postings scan: the metadata sum when the store
+    says it is exact (SegmentStore.df_exact), else decoded distinct
+    live docs (cross-segment overlap and tombstones are both exact)."""
+    if store.df_exact():
+        return rows.groupBy("term").agg(F.sum("df").alias("df"))
     return (
-        postings_df(spark, store, uniq, min_doc, max_doc, with_tf=False)
-        .groupBy("doc_id")
-        .agg(F.countDistinct("term").alias("_nt"))
-        .where(F.col("_nt") == len(uniq))
-        .select("doc_id")
-        .orderBy("doc_id")
+        decoded_postings(spark, store, rows, with_tf=False)
+        .groupBy("term")
+        .agg(F.countDistinct("doc_id").alias("df"))
     )

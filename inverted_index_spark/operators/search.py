@@ -23,8 +23,13 @@ from inverted_index_spark.functions.codec import (
 )
 from inverted_index_spark.operators import bm25 as _bm25
 from inverted_index_spark.operators import wand as _wand
-from inverted_index_spark.operators.query import _decode_rows
-from inverted_index_spark.sources.store import SegmentStore
+from inverted_index_spark.operators.query import _decode_rows, decoded_postings
+from inverted_index_spark.sources.store import (
+    POSTINGS_SCHEMA,
+    SegmentStore,
+    apply_buckets,
+    tombstoned,
+)
 
 # batched-query maps above this many entries ship via broadcast instead
 # of the task closure (a closure is re-serialized into EVERY task; a
@@ -78,92 +83,46 @@ def _one_task_topk(rows: DataFrame, query_map, avgdl: float, k: int) -> DataFram
 
 
 def _purged_postings(spark: SparkSession, store: SegmentStore, raw: DataFrame) -> DataFrame:
-    """Rewrite a postings scan with the store's live deletes physically
-    removed (decode → mask → re-encode, per (bucket, term) row). Runs
+    """A postings scan with the store's live deletes physically removed
+    (decode → mask → re-encode, per bucket; store.apply_buckets). Runs
     ONCE at Searcher.open — every cached-path kernel (topk, WAND,
     batch, read_values) then sees only surviving docs and exact
-    surviving df, with zero per-query cost.
-
-    Deletes are GENERATION-SCOPED (store.read_deletes): ``raw`` must
-    carry the ``_sgen`` scan-class column (read_postings
-    with_gen=True), and a tombstone only masks rows whose source
-    segment predates it — a reindexed doc's new postings survive.
-
-    Scale shape: the delete set ships as per-bucket sorted arrays via a
-    co-partitioned equi-join on bucket (NOT a broadcast — a 100 TB
-    corpus can carry billions of tombstones); rows in buckets with no
-    deletes pass through without decoding."""
-    from inverted_index_spark.sources.store import POSTINGS_SCHEMA
-
-    bs = store.pinned_bucket_size()
-    if bs is None:
-        raise ValueError(
-            "store has live deletes but no pinned bucket_size — "
-            "cannot map delete doc_ids onto postings buckets"
-        )
+    surviving df, with zero per-query cost. A scan without ``_sgen``
+    (no live deletes) is returned as it is."""
     if "_sgen" not in raw.columns:
-        raise ValueError("_purged_postings needs a with_gen=True scan (_sgen)")
-    dmap = (
-        store.read_deletes(spark, with_gen=True)
-        .select(F.expr(f"cast(doc_id div {int(bs)} as long)").alias("bucket"),
-                "doc_id", "del_gen")
-        .groupBy("bucket")
-        .agg(
-            F.array_sort(
-                F.collect_list(F.struct("doc_id", "del_gen"))
-            ).alias("dels_arr")
-        )
-    )
-    joined = raw.join(dmap, "bucket", "left")
+        return raw
+    return apply_buckets(spark, store, raw, _purge_batch, POSTINGS_SCHEMA)
+
+
+def _purge_batch(pdf: pd.DataFrame, tomb: pd.DataFrame) -> pd.DataFrame:
+    """:func:`_purged_postings`' kernel: one bucket's posting rows and
+    its tombstones (sorted by doc_id) → the rows with every tombstoned
+    posting removed (generation-scoped, store.tombstoned). Rows whose
+    doc envelope holds no tombstone pass through undecoded; the rest
+    decode in one call."""
     cols = list(POSTINGS_SCHEMA.fieldNames())
-
-    def run(batches):
-        for pdf in batches:
-            out = _purge_batch(pdf, cols)
-            if len(out):
-                yield out
-
-    return joined.mapInPandas(run, schema=POSTINGS_SCHEMA)
-
-
-def _purge_batch(pdf: pd.DataFrame, cols: list[str]) -> pd.DataFrame:
-    """:func:`_purged_postings`' kernel: one batch of posting rows, each
-    joined with its bucket's tombstones (``dels_arr``, sorted by
-    doc_id, null for a bucket without any) → the rows with every
-    tombstoned posting removed. Rows no tombstone applies to pass
-    through undecoded; the rest decode in one call."""
+    td = tomb["doc_id"].to_numpy(np.int64)
     # df = 0 rows are empty-postings term registrations
-    cand = (pdf["dels_arr"].notna() & (pdf["df"] > 0)).to_numpy()
+    cand = (
+        (np.searchsorted(td, pdf["max_doc"].to_numpy(np.int64), "right")
+         > np.searchsorted(td, pdf["min_doc"].to_numpy(np.int64), "left"))
+        & (pdf["df"] > 0).to_numpy()
+    )
     keep = ~cand
-    hit_pos, hit_dels = [], []
-    rows = pdf[cand]
-    for pos, dels_arr, sgen, lo_doc, hi_doc in zip(
-        np.flatnonzero(cand), rows["dels_arr"], rows["_sgen"], rows["min_doc"],
-        rows["max_doc"],
-    ):
-        dels = np.asarray([x["doc_id"] for x in dels_arr], np.int64)
-        gens = np.asarray([x["del_gen"] for x in dels_arr], np.int64)
-        # scope: only tombstones NEWER than this row's segment apply;
-        # prune to the row's doc envelope
-        a = int(np.searchsorted(dels, lo_doc, "left"))
-        b = int(np.searchsorted(dels, hi_doc, "right"))
-        sub = dels[a:b][gens[a:b] > np.int64(sgen)]
-        if len(sub):
-            hit_pos.append(pos)
-            hit_dels.append(sub)
-        else:
-            keep[pos] = True
-    hit = pdf.iloc[hit_pos]
+    hit = pdf[cand]
     row_lens, docs, tfs, dls = decode_rows_concat(
         hit["postings"], hit["tfs"], hit["dls"], hit["blocks"]
     )
+    dead = tombstoned(hit, row_lens, docs, tomb)
+    if dead is None:
+        return pdf[cols]
     bounds = np.concatenate(([0], np.cumsum(row_lens)))
     rewritten = []
-    for j, sub in enumerate(hit_dels):
+    for j, pos in enumerate(np.flatnonzero(cand)):
         row = slice(bounds[j], bounds[j + 1])
-        alive = ~np.isin(docs[row], sub)
+        alive = ~dead[row]
         if alive.all():
-            keep[hit_pos[j]] = True
+            keep[pos] = True
         elif alive.any():  # else every doc is deleted: drop the term row
             d2 = docs[row][alive]
             p2, t2, l2, blocks2 = encode_postings(
@@ -237,19 +196,13 @@ class Searcher:
         # per-query exchange — a WAND/topk query becomes ONE stage over
         # cached columnar batches plus a TakeOrdered merge (one-time
         # shuffle here instead of one per query)
-        if self.store.has_deletes():
-            # physically purge live deletes into the cache ONCE —
-            # every kernel (WAND, exhaustive, batch, read_values) then
-            # scores only surviving docs with exact surviving df, and
-            # per-query paths pay nothing for delete support. The scan
-            # carries _sgen so the purge is generation-scoped (a
-            # reindexed doc's new postings survive its tombstone).
-            raw = _purged_postings(
-                self.spark, self.store,
-                self.store.read_postings(self.spark, with_gen=True),
-            )
-        else:
-            raw = self.store.read_postings(self.spark)
+        # live deletes are physically purged into the cache ONCE —
+        # every kernel (WAND, exhaustive, batch, read_values) then
+        # scores only surviving docs with exact surviving df, and
+        # per-query paths pay nothing for delete support
+        raw = _purged_postings(
+            self.spark, self.store, self.store.read_postings(self.spark)
+        )
         self._postings = raw.repartition("bucket").cache()
         self._postings.count()  # materialize
         self._stats = _bm25.corpus_stats(self.spark, self.store)
@@ -377,12 +330,9 @@ class Searcher:
         )
 
         if getattr(self, "_positions", None) is None:
-            # with_gen when deletes are live: the cached rows carry
-            # _sgen so phrase_match_rows applies the scoped filter on
-            # decoded occurrences (pre-kernel)
-            self._positions = read_positions(
-                self.spark, self.store, with_gen=self.store.has_deletes()
-            ).cache()
+            # with live deletes the cached rows carry _sgen, so
+            # phrase_match_rows masks tombstones in its bucket kernel
+            self._positions = read_positions(self.spark, self.store).cache()
             self._positions.count()
         return phrase_match_rows(
             self.spark, self._positions, phrase, min_doc, max_doc, slop,
@@ -437,9 +387,8 @@ class Searcher:
         batches instead of a fresh per-query decode (round-4; the
         reference's eager bitmap cache has the same open-once shape)."""
         if self._dfs is None:
-            decoded = self.postings.mapInPandas(
-                lambda it: _decode_rows(it, None, None, False),
-                schema="term string, doc_id long",
+            decoded = decoded_postings(
+                self.spark, self.store, self.postings, with_tf=False
             )
             self._dfs = (
                 decoded.groupBy("term")
@@ -508,8 +457,10 @@ class Searcher:
 
             def _unique_docs(batches):
                 chunks = [
-                    pdf["doc_id"].to_numpy(np.int64)
-                    for pdf in _decode_rows(batches, min_doc, max_doc, False)
+                    _decode_rows(pdf, min_doc=min_doc, max_doc=max_doc)[
+                        "doc_id"
+                    ].to_numpy(np.int64)
+                    for pdf in batches
                 ]
                 vals = (
                     np.unique(np.concatenate(chunks))
@@ -519,9 +470,8 @@ class Searcher:
                 yield pd.DataFrame({"doc_id": vals})
 
             return rows.coalesce(1).mapInPandas(_unique_docs, schema="doc_id long")
-        decoded = rows.mapInPandas(
-            lambda it: _decode_rows(it, min_doc, max_doc, False),
-            schema="term string, doc_id long",
+        decoded = decoded_postings(
+            self.spark, self.store, rows, min_doc, max_doc, with_tf=False
         )
         return decoded.select("doc_id").distinct().orderBy("doc_id")
 

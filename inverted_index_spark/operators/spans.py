@@ -47,9 +47,7 @@ def _pruned_occurrences(
 ) -> DataFrame:
     """One pruned positions scan shared by every span operator:
     (doc_id, term, pos) for the query terms only."""
-    rows = read_positions(
-        spark, store, with_gen=store.has_deletes()
-    ).where(F.col("term").isin(sorted(set(terms))))
+    rows = read_positions(spark, store).where(F.col("term").isin(sorted(set(terms))))
     if min_doc is not None:
         rows = rows.where(F.col("max_doc") >= F.lit(int(min_doc)))
     if max_doc is not None:
@@ -113,9 +111,7 @@ def span_first(
     for i, t in enumerate(phrase):
         offs.setdefault(t, []).append(i)
 
-    rows = read_positions(
-        spark, store, with_gen=store.has_deletes()
-    ).where(F.col("term").isin(sorted(offs)))
+    rows = read_positions(spark, store).where(F.col("term").isin(sorted(offs)))
     # span starts live in [0, end): only position blocks overlapping
     # the window matter — min_doc/max_doc prune as usual
     if min_doc is not None:
@@ -182,9 +178,7 @@ def span_not(
     ex_terms = sorted(set(exclude))
     all_terms = sorted(set(offs) | set(ex_terms))
 
-    rows = read_positions(
-        spark, store, with_gen=store.has_deletes()
-    ).where(F.col("term").isin(all_terms))
+    rows = read_positions(spark, store).where(F.col("term").isin(all_terms))
     if min_doc is not None:
         rows = rows.where(F.col("max_doc") >= F.lit(int(min_doc)))
     if max_doc is not None:

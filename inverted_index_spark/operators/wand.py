@@ -42,6 +42,25 @@ def _tf_norm(tf, dl, avgdl):
     return tf / (tf + K1 * (1.0 - B + B * dl / avgdl))
 
 
+class _RowDecode:
+    """One encoded row, decoded in full at its first block's decode and
+    shared by all its blocks' handles — one primitive call per row, not
+    one per block (each call re-reads the row's block metadata)."""
+
+    __slots__ = ("row", "arrays")
+
+    def __init__(self, row):
+        self.row = row  # (postings, tfs, dls, blocks)
+        self.arrays = None  # (docs, tfs, dls), int64
+
+    def get(self):
+        if self.arrays is None:
+            p, t, l, blocks = self.row
+            _, docs, tfs, dls = decode_rows_concat([p], [t], [l], [blocks])
+            self.arrays = (docs, tfs.astype(np.int64), dls.astype(np.int64))
+        return self.arrays
+
+
 class _BlockHandle:
     """Lazy posting block: bounds + WAND stats now, decode on demand."""
 
@@ -53,16 +72,13 @@ class _BlockHandle:
         self.max_tf = max_tf
         self.min_dl = min_dl
         self.n = n  # posting count (adaptive exhaustive-fallback sizing)
-        self._row = row  # (postings, tfs, dls, blocks) of its encoded row
+        self._row = row  # (shared _RowDecode, start, end) of its postings
         self._cache = cache  # (docs, tfs, dls), int64
 
     def decode(self):
         if self._cache is None:
-            p, t, l, blocks = self._row
-            _, docs, tfs, dls = decode_rows_concat(
-                [p], [t], [l], [blocks], self.first_doc, self.last_doc
-            )
-            self._cache = (docs, tfs.astype(np.int64), dls.astype(np.int64))
+            shared, a, b = self._row
+            self._cache = tuple(x[a:b] for x in shared.get())
         return self._cache
 
 
@@ -72,12 +88,14 @@ def _term_handles(grp: pd.DataFrame) -> list[_BlockHandle]:
     materialized chunks so no (term, doc) pair ever double-counts."""
     if len(grp) == 1:
         r = grp.iloc[0]
-        row = (r["postings"], r["tfs"], r["dls"], r["blocks"])
+        shared = _RowDecode((r["postings"], r["tfs"], r["dls"], r["blocks"]))
+        ends = np.cumsum([int(b["n"]) for b in r["blocks"]])
         return [
             _BlockHandle(
-                b["first_doc"], b["last_doc"], b["max_tf"], b["min_dl"], b["n"], row
+                b["first_doc"], b["last_doc"], b["max_tf"], b["min_dl"], b["n"],
+                (shared, int(e - b["n"]), int(e)),
             )
-            for b in r["blocks"]
+            for b, e in zip(r["blocks"], ends)
         ]
     _, d, tf, dl = decode_rows_concat(
         grp["postings"], grp["tfs"], grp["dls"], grp["blocks"]
@@ -306,18 +324,13 @@ def bm25_topk_wand(
         return spark.range(0).select(
             F.col("id").alias("doc_id"), F.lit(0.0).alias("score")
         )
-    if store.has_deletes():
-        # the WAND kernel truncates per bucket, so a post-filter would
-        # under-fill k — purge tombstones from the matched rows first
-        # (same generation-scoped rewrite Searcher.open applies to its
-        # cache; needs the _sgen provenance column)
-        from inverted_index_spark.operators.search import _purged_postings
+    # the WAND kernel truncates per bucket, so a post-filter would
+    # under-fill k — purge tombstones from the matched rows first (the
+    # rewrite Searcher.open applies to its cache; a no-op without
+    # live deletes)
+    from inverted_index_spark.operators.search import _purged_postings
 
-        rows = _purged_postings(
-            spark, store, matching_rows(spark, store, list(idf_map), with_gen=True)
-        )
-    else:
-        rows = matching_rows(spark, store, list(idf_map))
+    rows = _purged_postings(spark, store, matching_rows(spark, store, list(idf_map)))
 
     def run(pdf: pd.DataFrame) -> pd.DataFrame:
         return _wand_bucket(pdf, idf_map, avgdl, k)

@@ -90,29 +90,22 @@ class FederatedStore:
         ids = list(segment_ids or self.live_segments()["segment_id"])
         return [os.path.join(self.seg_dir(s), dataset) for s in ids]
 
+    def df_exact(self) -> bool:
+        return len(self.live_segments()) <= 1  # no deletes (see above)
+
+    def scan(self, spark: SparkSession, dataset: str, ids: list[str]) -> DataFrame:
+        """ONE multi-path scan over every member's datasets — identical
+        plan shape to a single store's multi-segment read, so term-IN
+        pushdown and (bucket, term) row-group pruning span the
+        federation (members are delete-free: never an ``_sgen``)."""
+        return spark.read.parquet(*self._paths(dataset, ids))
+
     def read_postings(
-        self,
-        spark: SparkSession,
-        segment_ids: list[str] | None = None,
-        with_segment_id: bool = False,
-        with_gen: bool = False,
+        self, spark: SparkSession, segment_ids: list[str] | None = None
     ) -> DataFrame:
-        """ONE multi-path scan over every member's live postings —
-        identical plan shape to a single store's multi-segment read, so
-        term-IN pushdown and (bucket, term) row-group pruning span the
-        federation."""
-        paths = self._paths("postings", segment_ids)
-        if not paths:
+        if not self._paths("postings", segment_ids):
             return self.stores[0].read_postings(spark, segment_ids=[])
-        df = spark.read.parquet(*paths)
-        if with_gen:  # no deletes → one scan class, constant gen
-            df = df.withColumn("_sgen", F.lit(0).cast("long"))
-        if with_segment_id:
-            df = df.withColumn(
-                "segment_id",
-                F.regexp_extract(F.input_file_name(), r"/segments/([^/]+)/", 1),
-            )
-        return df
+        return self.scan(spark, "postings", segment_ids)
 
     def read_docstats(
         self,

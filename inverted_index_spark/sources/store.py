@@ -31,6 +31,7 @@ import time
 import uuid
 from dataclasses import dataclass
 
+import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -83,22 +84,97 @@ LIVE, MERGED = "live", "merged"
 DELETES = "deletes"
 
 
-def scoped_minus_deletes(
-    spark: SparkSession, store: "SegmentStore", df: DataFrame
+# the tombstones of a bucket without any, in the shape kernels receive
+NO_TOMBS = pd.DataFrame(
+    {"doc_id": np.zeros(0, np.int64), "del_gen": np.zeros(0, np.int64)}
+)
+
+
+def tombstoned(
+    pdf: pd.DataFrame, row_lens: np.ndarray, docs: np.ndarray, tomb: pd.DataFrame
+) -> np.ndarray | None:
+    """The generation-scoped delete mask over ids decoded from
+    ``pdf``'s rows (``row_lens[i]`` of ``docs`` came from row ``i``):
+    True where a live tombstone NEWER than the row's source segment
+    (its ``_sgen``) names the doc. ``tomb`` is one bucket's
+    ``(doc_id, del_gen)`` sorted by doc_id, del_gen being the doc's
+    highest live batch generation (read_deletes) — "some batch newer
+    than the segment names d" ⇔ "max batch gen over d > segment gen".
+    None when nothing is masked."""
+    if not len(tomb) or not len(docs):
+        return None
+    td = tomb["doc_id"].to_numpy(np.int64)
+    tg = tomb["del_gen"].to_numpy(np.int64)
+    at = np.minimum(np.searchsorted(td, docs), len(td) - 1)
+    sgen = np.repeat(pdf["_sgen"].to_numpy(np.int64), row_lens)
+    dead = (td[at] == docs) & (tg[at] > sgen)
+    return dead if dead.any() else None
+
+
+def apply_buckets(
+    spark: SparkSession,
+    store: "SegmentStore",
+    rows: DataFrame,
+    kernel,
+    schema,
+    rowwise: bool = False,
 ) -> DataFrame:
-    """Generation-scoped delete filter: ``df`` carries doc-level rows
-    with an ``_sgen`` provenance column (read_* ``with_gen=True`` →
-    decode passthrough). A row is dropped iff SOME live delete batch
-    newer than its source segment tombstones its doc — i.e. the doc's
-    max live ``del_gen`` exceeds ``_sgen``. Equi anti-join on doc_id
-    with the gen comparison as the residual condition (AQE broadcasts
-    the delete side when it fits); ``_sgen`` is consumed here and
-    dropped."""
-    if not store.has_deletes():
-        return df.drop("_sgen")
-    dels = store.read_deletes(spark, with_gen=True)
-    cond = (df["doc_id"] == dels["doc_id"]) & (dels["del_gen"] > df["_sgen"])
-    return df.join(dels, cond, "left_anti").drop("_sgen")
+    """Run ``kernel(pdf, tomb)`` over stored rows carrying a ``bucket``
+    column — the one place tombstones reach the read and rewrite paths.
+
+    ``tomb`` is the bucket's live tombstones (see :func:`tombstoned`),
+    which every kernel applies right after decoding. Rows from a scan
+    with live deletes carry ``_sgen`` (SegmentStore.scan): they are
+    cogrouped by bucket with ``read_deletes(with_gen=True)`` keyed on
+    ``doc_id div bucket_size``, so each kernel call sees exactly its
+    bucket's slice of the delete set (co-partitioned, never broadcast).
+    Rows without ``_sgen`` get :data:`NO_TOMBS` and the deletes-free
+    plan: ``groupBy("bucket").applyInPandas``, or — ``rowwise``, for
+    kernels that need no whole bucket (row decoders) — ``mapInPandas``
+    over scan batches, empty outputs dropped."""
+    if "_sgen" not in rows.columns:
+        if rowwise:
+
+            def run(batches):
+                for pdf in batches:
+                    out = kernel(pdf, NO_TOMBS)
+                    if len(out):
+                        yield out
+
+            return rows.mapInPandas(run, schema=schema)
+        return rows.groupBy("bucket").applyInPandas(
+            lambda pdf: kernel(pdf, NO_TOMBS), schema=schema
+        )
+    bs = store.pinned_bucket_size()
+    if bs is None:
+        raise ValueError(
+            "store has live deletes but no pinned bucket_size — "
+            "cannot map delete doc_ids onto buckets"
+        )
+    tombs = store.read_deletes(spark, with_gen=True).select(
+        F.expr(f"cast(doc_id div {int(bs)} as long)").alias("bucket"),
+        "doc_id",
+        "del_gen",
+    )
+    return (
+        rows.groupBy("bucket")
+        .cogroup(tombs.groupBy("bucket"))
+        .applyInPandas(
+            lambda pdf, tomb: kernel(
+                pdf, tomb[["doc_id", "del_gen"]].sort_values("doc_id")
+            ),
+            schema=schema,
+        )
+    )
+
+
+def _live_doc_rows(pdf: pd.DataFrame, tomb: pd.DataFrame) -> pd.DataFrame:
+    """Doc-level rows (one doc each) minus the tombstoned ones."""
+    dead = tombstoned(
+        pdf, np.ones(len(pdf), np.int64), pdf["doc_id"].to_numpy(np.int64), tomb
+    )
+    out = pdf if dead is None else pdf[~dead]
+    return out.drop(columns="_sgen")
 
 
 class ErrMergeConflict(RuntimeError):
@@ -690,64 +766,49 @@ class SegmentStore:
         return n_deleted
 
     # ------------------------------------------------------------- reads
-    def read_postings(
-        self,
-        spark: SparkSession,
-        segment_ids: list[str] | None = None,
-        with_segment_id: bool = False,
-        with_gen: bool = False,
+    def df_exact(self) -> bool:
+        """True when the stored per-row ``df`` sums to each term's live
+        document frequency: one live segment (no cross-segment overlap)
+        and no live deletes. Otherwise df needs decoded distinct docs."""
+        return len(self.live_segments()) <= 1 and not self.has_deletes()
+
+    def scan(
+        self, spark: SparkSession, dataset: str, ids: list[str], scoped: bool = True
     ) -> DataFrame:
-        """Union of live segments' postings as ONE multi-path parquet
-        scan → predicate pushdown + file pruning apply across all
-        segments at once.
+        """ONE multi-path parquet scan of ``segments/<id>/<dataset>`` →
+        predicate pushdown + file pruning apply across all segments at
+        once.
 
-        segment_id (recovered from the file path) is opt-in: the
-        input_file_name() projection is non-deterministic to Catalyst
-        and would block filter pushdown into the scan.
-
-        ``with_gen`` adds ``_sgen`` — the scan-class representative
-        generation (delete_scan_classes), the provenance scoped delete
-        filtering needs. It is a LITERAL per class scan (one scan per
-        class, unioned), so pushdown/pruning still reach every scan —
-        unlike an input_file_name projection. One class → one scan,
-        exactly the plain plan plus a constant column.
-        """
-        live = self.live_segments()
-        ids = list(segment_ids or live["segment_id"])
-        if not ids:
-            schema = POSTINGS_SCHEMA
-            if with_segment_id:
-                schema = T.StructType(
-                    list(POSTINGS_SCHEMA.fields)
-                    + [T.StructField("segment_id", T.StringType())]
-                )
-            if with_gen:
-                schema = T.StructType(
-                    list(schema.fields) + [T.StructField("_sgen", T.LongType())]
-                )
-            return spark.createDataFrame([], schema)
-        if with_gen:
-            parts = []
-            for cls_ids, rep in self.delete_scan_classes(ids):
-                p = spark.read.parquet(
-                    *[os.path.join(self.seg_dir(s), "postings") for s in cls_ids]
-                ).withColumn("_sgen", F.lit(int(rep)))
-                parts.append(p)
-            df = parts[0]
-            for p in parts[1:]:
-                df = df.unionByName(p)
-            return df
-        paths = [os.path.join(self.seg_dir(s), "postings") for s in ids]
-        df = spark.read.parquet(*paths)
-        if with_segment_id:
-            seg_root = os.path.join(self.root, "segments")
-            df = df.withColumn(
-                "segment_id",
-                F.regexp_extract(
-                    F.input_file_name(), re_escape(seg_root) + "/([^/]+)/", 1
-                ),
+        With live deletes (and ``scoped``) the scan also carries
+        ``_sgen`` — the scan-class representative generation
+        (delete_scan_classes), the provenance generation-scoped
+        tombstones need (apply_buckets). It is a LITERAL per class scan
+        (one scan per class, unioned), so pushdown/pruning still reach
+        every scan; one class → the plain plan plus a constant column."""
+        classes = (
+            self.delete_scan_classes(ids)
+            if scoped and self.has_deletes()
+            else [(ids, None)]
+        )
+        df = None
+        for cls_ids, rep in classes:
+            part = spark.read.parquet(
+                *[os.path.join(self.seg_dir(s), dataset) for s in cls_ids]
             )
+            if rep is not None:
+                part = part.withColumn("_sgen", F.lit(int(rep)))
+            df = part if df is None else df.unionByName(part)
         return df
+
+    def read_postings(
+        self, spark: SparkSession, segment_ids: list[str] | None = None
+    ) -> DataFrame:
+        """Union of live segments' postings (:meth:`scan`): rows carry
+        ``_sgen`` exactly when deletes are live."""
+        ids = list(segment_ids or self.live_segments()["segment_id"])
+        if not ids:
+            return spark.createDataFrame([], POSTINGS_SCHEMA)
+        return self.scan(spark, "postings", ids)
 
     def read_docstats(
         self, spark: SparkSession, segment_ids: list[str] | None = None,
@@ -760,23 +821,24 @@ class SegmentStore:
                 [], T.StructType([T.StructField("doc_id", T.LongType()),
                                   T.StructField("dl", T.LongType())])
             )
-        paths = [os.path.join(self.seg_dir(s), "docstats") for s in ids]
-        if not include_deleted and self.has_deletes():
-            # scoped filter BEFORE the dedup: a reindexed doc has
-            # DIFFERENT dl in old vs new segments, and only the old
-            # copy is tombstoned — dedup-first could keep either
-            parts = [
-                spark.read.parquet(
-                    *[os.path.join(self.seg_dir(s), "docstats") for s in cls_ids]
-                ).withColumn("_sgen", F.lit(int(rep)))
-                for cls_ids, rep in self.delete_scan_classes(ids)
-            ]
-            raw = parts[0]
-            for p in parts[1:]:
-                raw = raw.unionByName(p)
-            return scoped_minus_deletes(spark, self, raw).dropDuplicates(["doc_id"])
+        raw = self.scan(spark, "docstats", ids, scoped=not include_deleted)
+        if "_sgen" in raw.columns:
+            # no pinned size → apply_buckets refuses to map tombstones
+            bs = self.pinned_bucket_size() or 1
+            raw = self._live_docs(
+                spark,
+                raw.withColumn("bucket", F.expr(f"cast(doc_id div {int(bs)} as long)")),
+            ).drop("bucket")
         # same doc may appear in several segments pre-compaction → dedup
-        return spark.read.parquet(*paths).dropDuplicates(["doc_id"])
+        return raw.dropDuplicates(["doc_id"])
+
+    def _live_docs(self, spark: SparkSession, raw: DataFrame) -> DataFrame:
+        """Doc-level rows minus tombstoned docs, BEFORE any cross-segment
+        dedup: a reindexed doc's old and new copies differ (dl, text)
+        and only the old one is tombstoned, so dedup-first could keep
+        either."""
+        schema = T.StructType([f for f in raw.schema.fields if f.name != "_sgen"])
+        return apply_buckets(spark, self, raw, _live_doc_rows, schema, rowwise=True)
 
     def read_docs(
         self,
@@ -810,25 +872,11 @@ class SegmentStore:
                 f"segments without a doc store: {missing} — rebuild with "
                 "build_index(..., store_text=True)"
             )
-        if not include_deleted and self.has_deletes():
-            # scoped filter BEFORE dedup (reindexed docs: old copy is
-            # tombstoned, new copy has different text — dedup-first
-            # could keep either)
-            parts = [
-                spark.read.parquet(
-                    *[os.path.join(self.seg_dir(s), "docs") for s in cls_ids]
-                ).withColumn("_sgen", F.lit(int(rep)))
-                for cls_ids, rep in self.delete_scan_classes(ids)
-            ]
-            raw = parts[0]
-            for p in parts[1:]:
-                raw = raw.unionByName(p)
-            if buckets is not None:
-                raw = raw.where(F.col("bucket").isin([int(b) for b in buckets]))
-            return scoped_minus_deletes(spark, self, raw).dropDuplicates(["doc_id"])
-        raw = spark.read.parquet(*paths)
+        raw = self.scan(spark, "docs", ids, scoped=not include_deleted)
         if buckets is not None:
             raw = raw.where(F.col("bucket").isin([int(b) for b in buckets]))
+        if "_sgen" in raw.columns:
+            raw = self._live_docs(spark, raw)
         return raw.dropDuplicates(["doc_id"])
 
     # ------------------------------------------------------------ merger
@@ -844,12 +892,6 @@ class SegmentStore:
     def summary(self) -> pd.DataFrame:
         """U1 PrintSummary analog (single/summary.go:9-54)."""
         return self.read_manifest()
-
-
-def re_escape(s: str) -> str:
-    import re
-
-    return re.escape(s)
 
 
 def new_segment_id() -> str:

@@ -147,7 +147,7 @@ def test_truncated_stream_raises_in_every_batched_decoder(spark, tmp_path):
     with pytest.raises(CorruptSegmentError):
         _merge_bucket_pdf(pdf, 2)
     with pytest.raises(Exception, match="CorruptSegmentError"):
-        _bucket_setop_rows(rows, None, None, None).collect()
+        _bucket_setop_rows(spark, store, rows, None, None, None).collect()
 
 
 # ------------------------------------------------------ corruption fuzz ---
@@ -199,23 +199,21 @@ def _kernel_runs(pdf: pd.DataFrame, lo, hi):
         _materialized_contributions,
         _term_handles,
     )
-    from inverted_index_spark.sources.store import POSTINGS_SCHEMA
-
-    dels = pdf.assign(dels_arr=[[{"doc_id": 120, "del_gen": 1}]] * len(pdf))
+    tomb = pd.DataFrame({"doc_id": [120], "del_gen": [1]})
     qmap = {"q": (["a", "b"], lo, hi)}
     return {
-        "decode_rows": lambda: list(_decode_rows(iter([pdf]), lo, hi, True)),
-        "setop_union": lambda: _setop_bucket(pdf, lo, hi, None),
-        "setop_and": lambda: _setop_bucket(pdf, lo, hi, 2),
+        "decode_rows": lambda: _decode_rows(pdf, tomb, lo, hi, True),
+        "setop_union": lambda: _setop_bucket(pdf, lo, hi, None, tomb),
+        "setop_and": lambda: _setop_bucket(pdf, lo, hi, 2, tomb),
         "read_values_batch": lambda: _read_values_batch_rows(
             pdf, qmap, {"a": ["q"], "b": ["q"]}, lo, hi
         ),
         "contributions": lambda: _materialized_contributions(
             pdf, {"a": 1.0, "b": 1.0}, 100.0
         ),
-        "merge": lambda: _merge_bucket_pdf(pdf, 4),
+        "merge": lambda: _merge_bucket_pdf(pdf, 4, tomb),
         "wand_blocks": lambda: [h.decode() for h in _term_handles(pdf[:1])],
-        "purge": lambda: _purge_batch(dels, list(POSTINGS_SCHEMA.fieldNames())),
+        "purge": lambda: _purge_batch(pdf, tomb),
     }
 
 
@@ -238,3 +236,63 @@ def test_corrupt_row_raises_in_every_decode_kernel(kind, kernel, scope):
         run()
     # the clean rows alone decode fine: the failure is the damage
     assert _kernel_runs(pdf[1:], lo, hi)[kernel]() is not None
+
+
+def _corrupt_positions_frame(kind: str) -> pd.DataFrame:
+    """A bucket of two POSITIONS_SCHEMA rows whose term "a" row is
+    damaged: a stream cut by its last byte (``*_cut``; the docs and
+    positions streams end in a two-byte varint, so those cuts land
+    mid-varint) or padded with one (``*_pad``), or its counts and
+    positions streams exchanged (``swap``)."""
+    from inverted_index_spark.operators.positions import encode_positions_arrays
+
+    enc = encode_positions_arrays(
+        np.array(["a"] * 4 + ["b"] * 2, dtype=object),
+        np.array([3, 3, 9, 200, 3, 9], dtype=np.int64),
+        np.array([0, 7, 2, 300, 1, 3], dtype=np.int64),
+        bucket=0,
+    )
+    stream, _, how = kind.partition("_")
+    col = {"docs": "docs", "counts": "counts", "pos": "positions"}.get(stream)
+    a = enc.index[enc["term"] == "a"][0]
+    if how == "cut":
+        enc.at[a, col] = enc.at[a, col][:-1]
+    elif how == "pad":
+        enc.at[a, col] = enc.at[a, col] + b"\x01"
+    else:
+        enc.at[a, "counts"], enc.at[a, "positions"] = (
+            enc.at[a, "positions"], enc.at[a, "counts"]
+        )
+    return enc.assign(_sgen=0)
+
+
+@pytest.mark.parametrize(
+    "kind", ["docs_cut", "docs_pad", "counts_cut", "pos_cut", "pos_pad", "swap"]
+)
+@pytest.mark.parametrize("kernel", ["decode_rows", "per_term", "phrase"])
+def test_corrupt_positions_row_raises_in_every_kernel(kind, kernel):
+    """One damaged positions row must fail every kernel that decodes
+    positions with CorruptSegmentError — never a bare numpy error, a
+    short decode or a misaligned (doc, pos) pairing."""
+    from inverted_index_spark.operators.positions import (
+        _per_term_occurrences,
+        _phrase_bucket,
+        decode_position_rows,
+    )
+
+    tomb = pd.DataFrame({"doc_id": [9], "del_gen": [1]})
+    runs = {
+        "decode_rows": lambda pdf: decode_position_rows(pdf, tomb),
+        "per_term": lambda pdf: _per_term_occurrences(pdf, None, None, tomb),
+        "phrase": lambda pdf: _phrase_bucket(
+            pdf, tomb, {"a": [0], "b": [1]}, 2, 0, None, None
+        ),
+    }
+    pdf = _corrupt_positions_frame(kind)
+    with pytest.raises(CorruptSegmentError):
+        runs[kernel](pdf)
+    # the clean row alone decodes, and the tombstone masks doc 9
+    clean = pdf[pdf["term"] == "b"]
+    out = decode_position_rows(clean, tomb)
+    assert sorted(zip(out["doc_id"], out["pos"])) == [(3, 1)]
+    assert runs[kernel](clean) is not None

@@ -115,8 +115,8 @@ def test_positions_roundtrip_property(occ):
     docs = np.array([r[1] for r in rows], dtype=np.int64)
     poss = np.array([r[2] for r in rows], dtype=np.int64)
     enc = encode_positions_arrays(terms, docs, poss, bucket=0)
-    out = list(decode_position_rows(iter([enc])))
-    got = sorted(zip(out[0]["term"], out[0]["doc_id"], out[0]["pos"])) if out else []
+    out = decode_position_rows(enc)
+    got = sorted(zip(out["term"], out["doc_id"], out["pos"]))
     assert got == rows
 
 

@@ -309,9 +309,7 @@ def test_purged_postings_codec_roundtrip(spark, tmp_path):
     d, tf, dl = decode_row(row)
     victims = [int(x) for x in d.view(np.int64)[::3]]
     store.delete_docs(spark, victims)
-    purged = _purged_postings(
-        spark, store, store.read_postings(spark, with_gen=True)
-    )
+    purged = _purged_postings(spark, store, store.read_postings(spark))
     prow = purged.where(
         (F.col("term") == row["term"]) & (F.col("bucket") == row["bucket"])
     ).collect()[0]

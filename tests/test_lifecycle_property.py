@@ -1,7 +1,9 @@
 """Randomized store-lifecycle property test: a seeded random sequence
 of {build chunk, delete docs, reindex docs, merge, cleanup} must leave
-the store EXACTLY "as-if-rebuilt" — read_values / read_terms / BM25
-equal to a fresh single-build over the logically surviving corpus.
+the store EXACTLY "as-if-rebuilt" — read_values / and_values /
+read_values_prefix / phrase_match (exact and sloppy) / read_terms /
+BM25 equal to a fresh single-build over the logically surviving
+corpus.
 
 This is the engine's trickiest invariant surface (generation-scoped
 delete batches × merge purging × reindex supersession × cleanup); two
@@ -23,10 +25,18 @@ import random
 from inverted_index_spark.operators.bm25 import bm25_scores
 from inverted_index_spark.operators.build import build_index, reindex_docs
 from inverted_index_spark.operators.merge import merge_segments
-from inverted_index_spark.operators.query import read_terms, read_values
+from inverted_index_spark.operators.positions import phrase_match
+from inverted_index_spark.operators.query import (
+    and_values,
+    read_terms,
+    read_values,
+    read_values_prefix,
+)
 from inverted_index_spark.sources.store import SegmentStore
 
 VOCAB = [f"t{i:02d}" for i in range(12)]
+# every build of the sequence and of its fresh twin
+BUILD_KW = dict(bucket_size=16, block_size=8, positions=True)
 
 
 def _mk_text(rng: random.Random) -> str:
@@ -48,14 +58,26 @@ def _fresh_equivalent(spark, tmp_path, model: dict[int, str], tag: str):
     df = spark.createDataFrame(
         sorted(model.items()), "doc_id long, text string"
     )
-    build_index(spark, df, ref, bucket_size=16, block_size=8)
+    build_index(spark, df, ref, **BUILD_KW)
     return ref
 
 
 def _snapshot(spark, store, probe_terms):
+    def ids(df):
+        return [r["doc_id"] for r in df.collect()]
+
+    pair = probe_terms[:2]
     vals = {
-        t: [r["doc_id"] for r in read_values(spark, store, [t]).collect()]
-        for t in probe_terms
+        **{t: ids(read_values(spark, store, [t])) for t in probe_terms},
+        "and": ids(and_values(spark, store, pair)),
+        "prefix": ids(read_values_prefix(spark, store, "t0")),
+        **{
+            f"phrase~{slop}": sorted(
+                (r["doc_id"], r["n_matches"])
+                for r in phrase_match(spark, store, pair, slop=slop).collect()
+            )
+            for slop in (0, 2)
+        },
     }
     terms = [r["term"] for r in read_terms(spark, store).collect()]
     scores = sorted(
@@ -79,8 +101,7 @@ def test_random_lifecycle_as_if_rebuilt(spark, tmp_path):
             spark,
             spark.createDataFrame(first, "doc_id long, text string"),
             store,
-            bucket_size=16,
-            block_size=8,
+            **BUILD_KW,
         )
         _apply_model(model, "add", first)
 
@@ -95,8 +116,7 @@ def test_random_lifecycle_as_if_rebuilt(spark, tmp_path):
                     spark,
                     spark.createDataFrame(batch, "doc_id long, text string"),
                     store,
-                    bucket_size=16,
-                    block_size=8,
+                    **BUILD_KW,
                 )
                 _apply_model(model, "add", batch)
             elif op == "delete" and model:
@@ -114,8 +134,7 @@ def test_random_lifecycle_as_if_rebuilt(spark, tmp_path):
                     spark,
                     spark.createDataFrame(batch, "doc_id long, text string"),
                     store,
-                    bucket_size=16,
-                    block_size=8,
+                    **BUILD_KW,
                 )
                 _apply_model(model, "reindex", batch)
             elif op == "merge":

@@ -131,3 +131,42 @@ def test_resumable_build_skips_committed(spark, store):
                                  bucket_size=32)
     assert ids2 == ids1
     assert len(store.live_segments()) == len(ids1)
+
+
+def test_failed_merge_leaves_no_residue(spark, tmp_path, monkeypatch):
+    """A merge that fails before its commit removes its half-written
+    segment directory, leaves the manifest untouched, and carries a
+    writer thread's error on the exception it raises."""
+    from pyspark.sql import functions as F
+
+    from inverted_index_spark.operators import positions
+
+    store = SegmentStore(str(tmp_path / "idx"))
+    w = SegmentWriter(spark, store)
+    w.put("a", [1, 2, 3])
+    w.close()
+    w = SegmentWriter(spark, store)
+    w.put("a", [4, 5])
+    w.close()
+    seg_root = os.path.join(store.root, "segments")
+    before = sorted(os.listdir(seg_root))
+    gen = store.current_generation()
+
+    def fail_positions(*_a, **_k):
+        raise RuntimeError("positions rewrite failed")
+
+    def failing_docstats(spark, *_a, **_k):
+        return spark.range(1).select(
+            F.col("id").alias("doc_id"),
+            F.when(F.col("id") >= 0, F.raise_error("docstats writer failed"))
+            .cast("long")
+            .alias("dl"),
+        )
+
+    monkeypatch.setattr(positions, "merge_positions", fail_positions)
+    monkeypatch.setattr(store, "read_docstats", failing_docstats)
+    with pytest.raises(RuntimeError, match="positions rewrite failed") as err:
+        merge_segments(spark, store, min_files=2)
+    assert sorted(os.listdir(seg_root)) == before
+    assert store.current_generation() == gen
+    assert any("docstats writer failed" in n for n in err.value.__notes__)

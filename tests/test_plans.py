@@ -228,3 +228,27 @@ def test_gated_small_query_plans_have_no_exchange(spark, store):
         assert "Window" not in formatted_plan(tb)
     finally:
         s.close()
+
+
+def test_live_delete_reads_mask_tombstones_in_bucket_kernels(spark, tmp_path):
+    """With live deletes, read_values, and_values and phrase_match keep
+    their bucket kernels: the rows are cogrouped with each bucket's
+    tombstones (FlatMapCoGroupsInPandas) and masked in-kernel — no
+    exploded anti-join (LeftAnti) of decoded rows against the deletes."""
+    from inverted_index_spark.operators.positions import phrase_match
+    from inverted_index_spark.operators.query import and_values, read_values
+    from inverted_index_spark.plans import formatted_plan
+
+    s = SegmentStore(str(tmp_path / "idx"))
+    docs = generate_transcripts(spark, 120, include_doc_id=True)
+    build_index(spark, docs, s, bucket_size=32, positions=True)
+    s.delete_docs(spark, [1, 2, 40])
+    for df in (
+        read_values(spark, s, ["w00000", "w00001"], 10, 100),
+        and_values(spark, s, ["w00000", "w00001"]),
+        phrase_match(spark, s, ["w00000", "w00001"]),
+        phrase_match(spark, s, ["w00000", "w00001"], slop=2),
+    ):
+        plan = formatted_plan(df)
+        assert "FlatMapCoGroupsInPandas" in plan
+        assert "LeftAnti" not in plan

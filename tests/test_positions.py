@@ -101,7 +101,7 @@ def test_positions_roundtrip_exact():
     import pandas as pd
 
     enc = encode_positions_arrays(terms, docs, poss, bucket=0)
-    out = list(decode_position_rows(iter([enc])))[0]
+    out = decode_position_rows(enc)
     got = sorted(zip(out["term"], out["doc_id"], out["pos"]))
     assert got == [("a", 3, 0), ("a", 3, 7), ("a", 9, 2), ("b", 3, 1), ("b", 4, 0)]
     assert isinstance(enc, pd.DataFrame)
