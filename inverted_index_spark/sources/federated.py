@@ -39,7 +39,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from inverted_index_spark.sources.store import SegmentStore
+from inverted_index_spark.sources.store import SegmentStore, read_parquet
 
 
 class FederatedStore:
@@ -97,8 +97,10 @@ class FederatedStore:
         """ONE multi-path scan over every member's datasets — identical
         plan shape to a single store's multi-segment read, so term-IN
         pushdown and (bucket, term) row-group pruning span the
-        federation (members are delete-free: never an ``_sgen``)."""
-        return spark.read.parquet(*self._paths(dataset, ids))
+        federation (members are delete-free: never an ``_sgen``).
+        Listed once per path set, like a member's own scans
+        (store.read_parquet)."""
+        return read_parquet(spark, self._paths(dataset, ids))
 
     def read_postings(
         self, spark: SparkSession, segment_ids: list[str] | None = None
@@ -124,7 +126,7 @@ class FederatedStore:
                     ]
                 ),
             )
-        return spark.read.parquet(*paths).dropDuplicates(["doc_id"])
+        return read_parquet(spark, paths).dropDuplicates(["doc_id"])
 
     def read_docs(
         self,
@@ -140,7 +142,7 @@ class FederatedStore:
                 f"segments without a doc store: {missing} — rebuild members "
                 "with build_index(..., store_text=True)"
             )
-        raw = spark.read.parquet(*paths)
+        raw = read_parquet(spark, paths)
         if buckets is not None:
             raw = raw.where(F.col("bucket").isin([int(b) for b in buckets]))
         return raw.dropDuplicates(["doc_id"])

@@ -14,9 +14,24 @@ generation-numbered manifest:
 
 Commit = write gen-(n+1) then atomically swap CURRENT — the
 parquet-only stand-in for an Iceberg snapshot commit (no Iceberg jars
-in this sandbox; the interface is the thing). Readers resolve CURRENT
-once per query → snapshot isolation replaces the reference's
-RWMutex/TryLock dance (multiple/files_list.go:9-16).
+in this sandbox; the interface is the thing). Every manifest read
+resolves the newest gen file with one ``listdir`` → snapshot isolation
+replaces the reference's RWMutex/TryLock dance
+(multiple/files_list.go:9-16).
+
+Reads plan from a warm snapshot, as the reference's opened index does
+(``OpenInvertedIndex`` caches at open), through two process-wide memos:
+
+- a gen file is parsed once: :func:`_read_gen_file` keys the parsed
+  frame on the file's identity (path, inode, size, mtime), so a root
+  that is removed and rebuilt reads its new manifest, and an expired
+  generation still raises ``FileNotFoundError``;
+- a parquet path set is listed once per SparkContext:
+  :func:`read_parquet` keeps the ``spark.read.parquet`` DataFrame
+  (file listing + schema). Committed segment and delete directories
+  are never rewritten and segment ids are never reused — build, merge
+  and delete batches write only into fresh directories before they
+  commit — so a held listing stays exact.
 
 Manifest columns carry the north rule's lineage + metrics:
 (build_id, chunk, input_fingerprint, terms_per_sec, skew_ratio, ...).
@@ -26,9 +41,12 @@ from __future__ import annotations
 
 import json
 import os
+import random
 import shutil
+import threading
 import time
 import uuid
+from collections import OrderedDict
 from dataclasses import dataclass
 
 import numpy as np
@@ -84,6 +102,65 @@ LIVE, MERGED = "live", "merged"
 DELETES = "deletes"
 
 
+# the warm-snapshot memos (module docstring): small LRUs, one lock for
+# both. They are process-wide because stores are plain values that
+# callers create freely (SegmentStore(root), at(), federated members);
+# the keys make sharing safe.
+_MEMO_LOCK = threading.Lock()
+_MANIFESTS: OrderedDict = OrderedDict()  # gen-file identity → parsed frame
+_SCANS: OrderedDict = OrderedDict()  # (application id, paths) → DataFrame
+_MEMO_SIZE = 64
+
+
+def _memo_get(memo: OrderedDict, key):
+    with _MEMO_LOCK:
+        hit = memo.get(key)
+        if hit is not None:
+            memo.move_to_end(key)
+        return hit
+
+
+def _memo_put(memo: OrderedDict, key, value) -> None:
+    with _MEMO_LOCK:
+        memo[key] = value
+        if len(memo) > _MEMO_SIZE:
+            memo.popitem(last=False)
+
+
+def _read_gen_file(path: str) -> pd.DataFrame:
+    """A copy of the manifest snapshot in gen file ``path``, parsed at
+    most once per file identity. The identity is taken from the open
+    file (fstat), so the frame always matches the bytes it was read
+    from. Raises FileNotFoundError for a missing (expired) file."""
+    with open(path, "rb") as f:
+        st = os.fstat(f.fileno())
+        key = (path, st.st_ino, st.st_size, st.st_mtime_ns)
+        m = _memo_get(_MANIFESTS, key)
+        if m is None:
+            m = pd.read_parquet(f).reindex(columns=MANIFEST_COLS)
+            _memo_put(_MANIFESTS, key, m)
+    return m.copy()
+
+
+def read_parquet(spark: SparkSession, paths: list[str]) -> DataFrame:
+    """``spark.read.parquet(*paths)``, listed once per SparkContext and
+    path set (module docstring) — only for committed, immutable
+    segment and delete directories."""
+    key = (spark.sparkContext.applicationId, tuple(paths))
+    df = _memo_get(_SCANS, key)
+    if df is None:
+        df = spark.read.parquet(*paths)
+        _memo_put(_SCANS, key, df)
+    return df
+
+
+# a lost manifest race sleeps U(0, min(cap, base * 2^losses)) seconds
+# before it retries, so contending committers spread out instead of
+# re-reading and re-writing the manifest in lockstep
+_BACKOFF_BASE_S = 0.01
+_BACKOFF_CAP_S = 1.0
+
+
 # the tombstones of a bucket without any, in the shape kernels receive
 NO_TOMBS = pd.DataFrame(
     {"doc_id": np.zeros(0, np.int64), "del_gen": np.zeros(0, np.int64)}
@@ -97,10 +174,12 @@ def tombstoned(
     ``pdf``'s rows (``row_lens[i]`` of ``docs`` came from row ``i``):
     True where a live tombstone NEWER than the row's source segment
     (its ``_sgen``) names the doc. ``tomb`` is one bucket's
-    ``(doc_id, del_gen)`` sorted by doc_id, del_gen being the doc's
-    highest live batch generation (read_deletes) — "some batch newer
-    than the segment names d" ⇔ "max batch gen over d > segment gen".
-    None when nothing is masked."""
+    ``(doc_id, del_gen)`` rows, one per live batch naming the doc
+    (read_deletes), sorted by doc_id ascending then del_gen
+    descending: the left ``searchsorted`` lands on the doc's highest
+    batch generation, and "some batch newer than the segment names d"
+    ⇔ "max batch gen over d > segment gen". None when nothing is
+    masked."""
     if not len(tomb) or not len(docs):
         return None
     td = tomb["doc_id"].to_numpy(np.int64)
@@ -109,6 +188,14 @@ def tombstoned(
     sgen = np.repeat(pdf["_sgen"].to_numpy(np.int64), row_lens)
     dead = (td[at] == docs) & (tg[at] > sgen)
     return dead if dead.any() else None
+
+
+def _tomb_order(tomb: pd.DataFrame) -> pd.DataFrame:
+    """One bucket's tombstone rows in the order :func:`tombstoned`
+    reads them: doc_id ascending, then del_gen descending."""
+    return tomb[["doc_id", "del_gen"]].sort_values(
+        ["doc_id", "del_gen"], ascending=[True, False], ignore_index=True
+    )
 
 
 def apply_buckets(
@@ -127,11 +214,12 @@ def apply_buckets(
     with live deletes carry ``_sgen`` (SegmentStore.scan): they are
     cogrouped by bucket with ``read_deletes(with_gen=True)`` keyed on
     ``doc_id div bucket_size``, so each kernel call sees exactly its
-    bucket's slice of the delete set (co-partitioned, never broadcast).
-    Rows without ``_sgen`` get :data:`NO_TOMBS` and the deletes-free
-    plan: ``groupBy("bucket").applyInPandas``, or — ``rowwise``, for
-    kernels that need no whole bucket (row decoders) — ``mapInPandas``
-    over scan batches, empty outputs dropped."""
+    bucket's slice of the delete set (co-partitioned, never broadcast),
+    in :func:`_tomb_order`. Rows without ``_sgen`` get :data:`NO_TOMBS`
+    and the deletes-free plan: ``groupBy("bucket").applyInPandas``, or
+    — ``rowwise``, for kernels that need no whole bucket (row
+    decoders) — ``mapInPandas`` over scan batches, empty outputs
+    dropped."""
     if "_sgen" not in rows.columns:
         if rowwise:
 
@@ -160,9 +248,7 @@ def apply_buckets(
         rows.groupBy("bucket")
         .cogroup(tombs.groupBy("bucket"))
         .applyInPandas(
-            lambda pdf, tomb: kernel(
-                pdf, tomb[["doc_id", "del_gen"]].sort_values("doc_id")
-            ),
+            lambda pdf, tomb: kernel(pdf, _tomb_order(tomb)),
             schema=schema,
         )
     )
@@ -294,12 +380,12 @@ class SegmentStore:
     def read_manifest(self) -> pd.DataFrame:
         if self.pin_generation is not None:
             try:
-                return pd.read_parquet(
+                return _read_gen_file(
                     os.path.join(
                         self._manifest_dir(),
                         f"gen-{self.pin_generation}.parquet",
                     )
-                ).reindex(columns=MANIFEST_COLS)
+                )
             except FileNotFoundError:
                 raise FileNotFoundError(
                     f"pinned generation {self.pin_generation} has been "
@@ -313,9 +399,9 @@ class SegmentStore:
             if gen == 0:
                 return pd.DataFrame(columns=MANIFEST_COLS)
             try:
-                return pd.read_parquet(
+                return _read_gen_file(
                     os.path.join(self._manifest_dir(), f"gen-{gen}.parquet")
-                ).reindex(columns=MANIFEST_COLS)
+                )
             except FileNotFoundError:
                 continue
         raise RuntimeError("manifest read: resolved generation kept vanishing")
@@ -328,9 +414,10 @@ class SegmentStore:
             loop: base = max gen → manifest = read(base)
                   → next = transform(manifest, base)
                   → write temp → os.link(temp, gen-(base+1))  [atomic excl]
-                  → on EEXIST (someone else won base+1): retry on top
-                    of THEIR snapshot — transform is re-applied, so no
-                    committer's rows are ever lost.
+                  → on EEXIST (someone else won base+1): back off
+                    (jittered, capped exponential sleep), then retry on
+                    top of THEIR snapshot — transform is re-applied, so
+                    no committer's rows are ever lost.
 
         CURRENT remains as a best-effort monotone pointer for humans;
         readers resolve via the max-gen scan above."""
@@ -342,13 +429,14 @@ class SegmentStore:
             )
         self._require_writable()
         os.makedirs(self._manifest_dir(), exist_ok=True)
+        lost = 0
         for _ in range(1000):
             base = self.current_generation()
             try:
                 manifest = (
-                    pd.read_parquet(
+                    _read_gen_file(
                         os.path.join(self._manifest_dir(), f"gen-{base}.parquet")
-                    ).reindex(columns=MANIFEST_COLS)
+                    )
                     if base
                     else pd.DataFrame(columns=MANIFEST_COLS)
                 )
@@ -365,6 +453,12 @@ class SegmentStore:
                 os.link(tmp, target)  # atomic create-exclusive
             except FileExistsError:
                 os.unlink(tmp)
+                lost += 1
+                time.sleep(
+                    random.uniform(
+                        0, min(_BACKOFF_CAP_S, _BACKOFF_BASE_S * 2 ** min(lost, 16))
+                    )
+                )
                 continue  # lost the race — retry on the new base
             os.unlink(tmp)
             self._advance_current(gen)
@@ -627,36 +721,34 @@ class SegmentStore:
     def read_deletes(self, spark: SparkSession, with_gen: bool = False) -> DataFrame:
         """Union of live delete batches → distinct doc_id DataFrame.
 
-        ``with_gen`` adds ``del_gen`` — per doc, the HIGHEST
-        generation among live batches tombstoning it. A batch is
+        ``with_gen`` instead returns one ``(doc_id, del_gen)`` row per
+        live batch naming the doc, ``del_gen`` being that batch's
+        generation — no aggregate, so no exchange. A batch is
         GENERATION-SCOPED (Lucene per-segment liveness / Iceberg
         equality-delete sequence numbers): it applies only to segments
         with ``generation_added`` strictly below the batch's own, so a
         doc re-added AFTER its delete (reindex) is visible from the
-        newer segment. "exists a batch with gen > seg_gen containing
-        d" ⇔ "max batch gen over d > seg_gen", so the max is the only
-        number readers need."""
+        newer segment. Readers need only the doc's highest batch
+        generation, which :func:`tombstoned` finds in each bucket's
+        sorted rows."""
         dels = self.live_deletes()
         if not len(dels):
             return spark.createDataFrame(
                 [], "doc_id long" + (", del_gen long" if with_gen else "")
             )
+        paths = [os.path.join(self.seg_dir(s), "deletes") for s in dels["segment_id"]]
         if not with_gen:
-            paths = [
-                os.path.join(self.seg_dir(s), "deletes") for s in dels["segment_id"]
-            ]
-            return spark.read.parquet(*paths).select("doc_id").distinct()
-        parts = []
-        for sid, gen in zip(dels["segment_id"], dels["generation_added"]):
-            parts.append(
-                spark.read.parquet(os.path.join(self.seg_dir(sid), "deletes"))
-                .select("doc_id")
-                .withColumn("del_gen", F.lit(int(gen)))
+            return read_parquet(spark, paths).select("doc_id").distinct()
+        parts = [
+            read_parquet(spark, [p]).select(
+                "doc_id", F.lit(int(gen)).cast("long").alias("del_gen")
             )
+            for p, gen in zip(paths, dels["generation_added"])
+        ]
         out = parts[0]
         for p in parts[1:]:
             out = out.unionByName(p)
-        return out.groupBy("doc_id").agg(F.max("del_gen").alias("del_gen"))
+        return out
 
     def delete_scan_classes(
         self, segment_ids: list[str] | None = None
@@ -792,8 +884,8 @@ class SegmentStore:
         )
         df = None
         for cls_ids, rep in classes:
-            part = spark.read.parquet(
-                *[os.path.join(self.seg_dir(s), dataset) for s in cls_ids]
+            part = read_parquet(
+                spark, [os.path.join(self.seg_dir(s), dataset) for s in cls_ids]
             )
             if rep is not None:
                 part = part.withColumn("_sgen", F.lit(int(rep)))

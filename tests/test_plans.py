@@ -252,3 +252,25 @@ def test_live_delete_reads_mask_tombstones_in_bucket_kernels(spark, tmp_path):
         plan = formatted_plan(df)
         assert "FlatMapCoGroupsInPandas" in plan
         assert "LeftAnti" not in plan
+
+
+def test_live_delete_tombstones_need_no_doc_id_aggregate(spark, tmp_path):
+    """The tombstone side of a live-delete read is the plain union of
+    the live batches, each row carrying its own batch generation: no
+    HashAggregate keyed on doc_id (and no exchange feeding one), even
+    when two batches name the same doc."""
+    import re
+
+    from inverted_index_spark.operators.query import read_values
+
+    s = SegmentStore(str(tmp_path / "idx"))
+    docs = generate_transcripts(spark, 120, include_doc_id=True)
+    build_index(spark, docs, s, bucket_size=32)
+    s.delete_docs(spark, [1, 2, 40])
+    s.delete_docs(spark, [2, 41])
+    plan = formatted_plan(read_values(spark, s, ["w00000", "w00001"], 10, 100))
+    # the formatted plan's node details: "(n) Operator ..." then fields
+    nodes = [n for n in plan.split("\n\n") if re.match(r"\(\d+\) ", n)]
+    aggs = [n for n in nodes if n.split("\n", 1)[0].split()[1] == "HashAggregate"]
+    assert not [a for a in aggs if re.search(r"^Keys \[\d+\]: \[doc_id#", a, re.M)]
+    assert "FlatMapCoGroupsInPandas" in plan
