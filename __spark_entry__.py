@@ -1201,7 +1201,7 @@ def _rx_store_for(spark, sf):
 def _q_reindex_read_values(spark, sf):
     """R10 read after an atomic upsert (reindex_docs): superseded
     copies invisible, replacement content visible — delete batches are
-    generation-scoped (sources/store.py read_deletes), so only
+    generation-scoped (sources/store.py live_tombstones), so only
     segments older than the batch are masked. The oracle reads the
     post-update corpus directly."""
     return _query.read_values(

@@ -14,7 +14,7 @@ We pin one here so rank parity is well-defined:
 Two implementations of the same contract:
 
 ``tokenize``       the HOT PATH — pure JVM column expressions
-                   (regexp_extract_all + array_sort + run-length via
+                   (regexp_extract_all + sort_array + run-length via
                    higher-order functions), whole-stage codegen, zero
                    Python in the build. This is what the index build
                    uses: at 10^12 turns the tokenizer dominates build
@@ -74,13 +74,16 @@ def tokenize(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text") ->
     whole-stage codegen; docs with zero tokens produce no rows (the
     build derives their dl=0 via :func:`doc_length_expr`, not here).
     """
-    narrow = docs.select(
+    # no filter on toks: Spark would push it below the projection and
+    # run the regex twice per doc. A doc without tokens gets no starts,
+    # and the null row explode_outer emits for it is dropped after.
+    toks = docs.select(
         F.col(id_col).cast("long").alias("doc_id"),
         tokens_expr(F.col(text_col)).alias("toks"),
-    ).where(F.size("toks") > 0)
-    runs = narrow.select(
+    )
+    runs = toks.select(
         "doc_id",
-        F.expr("array_sort(toks)").alias("s"),
+        F.sort_array("toks").alias("s"),
         F.expr("cast(size(toks) as int)").alias("dl"),
     ).select(
         "doc_id",
@@ -88,17 +91,18 @@ def tokenize(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text") ->
         "dl",
         # 1-based positions where a new distinct term begins
         F.expr(
-            "filter(sequence(1, dl), i -> i = 1 OR element_at(s, i) <> element_at(s, i - 1))"
+            "IF(dl > 0, filter(sequence(1, dl),"
+            " i -> i = 1 OR element_at(s, i) <> element_at(s, i - 1)), array())"
         ).alias("starts"),
     )
     entries = F.expr(
         "zip_with(starts,"
-        " concat(slice(starts, 2, size(starts)), array(dl + 1)),"
+        " slice(concat(starts, array(dl + 1)), 2, size(starts)),"
         " (st, nx) -> struct(element_at(s, st) AS term, cast(nx - st AS int) AS tf))"
     )
     return runs.select(
-        "doc_id", F.explode(entries).alias("e"), "dl"
-    ).select("doc_id", F.col("e.term").alias("term"), F.col("e.tf").alias("tf"), "dl")
+        "doc_id", F.explode_outer(entries).alias("e"), "dl"
+    ).where("e IS NOT NULL").select("doc_id", "e.term", "e.tf", "dl")
 
 
 def normalize_nfc(docs: DataFrame, text_col: str = "text") -> DataFrame:

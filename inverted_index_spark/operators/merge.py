@@ -55,7 +55,7 @@ def _merge_bucket_pdf(
     of decoded — merging must never drop a registered term (the
     merge-invariance contract on read_terms).
 
-    ``tomb`` (the bucket's live tombstones, store.apply_buckets)
+    ``tomb`` (the store's live tombstones, store.apply_buckets)
     physically purges tombstoned docs from the rewrite with GENERATION
     SCOPING (store.tombstoned): a reindexed doc's new postings survive
     while every stale copy vanishes — the purge runs per source row,
@@ -120,7 +120,7 @@ def merge_segments(
 
     del_rows = store.live_deletes()
     del_ids = list(del_rows["segment_id"]) if len(del_rows) else []
-    # one plan: the victims' rows grouped by bucket, each bucket's live
+    # one plan: the victims' rows grouped by bucket, the live
     # tombstones purged in the rewrite kernel (apply_buckets)
     merged = apply_buckets(
         spark, store, store.read_postings(spark, victims),

@@ -21,7 +21,7 @@ Layout — one row per (bucket, term), three varint streams:
 Phrase match is bucket-local: buckets partition the doc space, so
 the matched terms' ENCODED rows are grouped by doc-bucket (one small
 exchange of varint streams, sized by the matched terms only) and one
-numpy kernel per bucket decodes them, masks the bucket's live
+numpy kernel per bucket decodes them, masks the store's live
 tombstones (store.apply_buckets), fans each occurrence out to its
 phrase offsets as ``adj = pos - offset`` and counts the starts where
 all k offsets land (:func:`sloppy_start_counts`; slop 0 is exact
@@ -50,6 +50,7 @@ from inverted_index_spark.sources.store import (
     NO_TOMBS,
     SegmentStore,
     apply_buckets,
+    doc_order,
     tombstoned,
 )
 
@@ -152,11 +153,15 @@ def position_tokens(
     """(doc_id, term, pos) occurrence rows — pure JVM (posexplode over
     the pinned tokenizer's token array; pos is the 0-based token
     offset, the unit phrase adjacency is defined in)."""
-    narrow = docs.select(
+    # not a size filter on toks, which Spark would push below the
+    # projection, running the regex twice per doc (tokenizer.tokenize)
+    toks = docs.select(
         F.col(id_col).cast("long").alias("doc_id"),
         tokens_expr(F.col(text_col)).alias("toks"),
-    ).where(F.size("toks") > 0)
-    return narrow.select("doc_id", F.posexplode("toks").alias("pos", "term"))
+    )
+    return toks.select(
+        "doc_id", F.posexplode_outer("toks").alias("pos", "term")
+    ).where("term IS NOT NULL")
 
 
 def encode_positions_segment(
@@ -449,11 +454,11 @@ def phrase_match_rows(
     store: SegmentStore | None = None,
 ) -> DataFrame:
     """phrase_match over an explicit POSITIONS_SCHEMA DataFrame — the
-    building block Searcher.phrase uses with its cached scan. Rows
-    carrying ``_sgen`` (a scan with live deletes) are cogrouped with
-    ``store``'s tombstones, which :func:`_phrase_bucket` masks right
-    after decoding, so a reindexed doc's stale positions can never
-    manufacture phantom matches."""
+    building block Searcher.phrase uses with its cached scan. For rows
+    carrying ``_sgen`` (a scan with live deletes) each bucket kernel
+    gets ``store``'s live tombstones (store.apply_buckets), which
+    :func:`_phrase_bucket` masks right after decoding, so a reindexed
+    doc's stale positions can never manufacture phantom matches."""
     if not phrase:
         return spark.createDataFrame([], "doc_id long, n_matches long")
     if slop < 0:
@@ -471,7 +476,7 @@ def phrase_match_rows(
             pdf, tomb, offs_map, len(phrase), slop, min_doc, max_doc
         ),
         "doc_id long, n_matches long",
-    ).orderBy("doc_id")
+    ).transform(doc_order)
 
 
 def _phrase_bucket(
@@ -718,7 +723,7 @@ def terms_within_window(
 
     return apply_buckets(
         spark, store, rows, run_bucket, "doc_id long, min_span long"
-    ).orderBy("doc_id")
+    ).transform(doc_order)
 
 
 def phrase_bm25_topk(

@@ -9,9 +9,10 @@ over any set of live segments, with cross-segment dedup (M3/M4):
 Plan shape (what .explain should show): one multi-segment parquet
 scan with ``term IN (...)`` pushed to the scan (term-partitioned
 row-group pruning), one exchange of the ENCODED rows by doc-bucket,
-and a bucket kernel that decodes (block-pruned), masks the bucket's
+and a bucket kernel that decodes (block-pruned), masks the store's
 live tombstones (store.apply_buckets) and emits only result doc ids,
-then a sort — no driver-side collection anywhere.
+then one single-partition sort (store.doc_order) — no driver-side
+collection anywhere.
 """
 
 from __future__ import annotations
@@ -26,6 +27,7 @@ from inverted_index_spark.sources.store import (
     NO_TOMBS,
     SegmentStore,
     apply_buckets,
+    doc_order,
     tombstoned,
 )
 
@@ -174,9 +176,9 @@ def read_values(
     # in-kernel np.unique per doc-bucket (buckets partition the doc
     # space, so the per-bucket results are disjoint)
     rows = matching_rows(spark, store, sorted(set(terms)), min_doc, max_doc)
-    return _bucket_setop_rows(spark, store, rows, min_doc, max_doc, None).orderBy(
-        "doc_id"
-    )
+    return _bucket_setop_rows(
+        spark, store, rows, min_doc, max_doc, None
+    ).transform(doc_order)
 
 
 def read_all_values(spark: SparkSession, store: SegmentStore, terms: list[str]) -> DataFrame:
@@ -477,9 +479,9 @@ def read_values_prefix(
     rows = matching_rows(
         spark, store, None, min_doc, max_doc, term_pred=F.col("term").startswith(prefix)
     )
-    return _bucket_setop_rows(spark, store, rows, min_doc, max_doc, None).orderBy(
-        "doc_id"
-    )
+    return _bucket_setop_rows(
+        spark, store, rows, min_doc, max_doc, None
+    ).transform(doc_order)
 
 
 def except_values(
@@ -525,7 +527,7 @@ def _bucket_setop_rows(
     exchanges disappear, and the Python boundary returns result ids
     only — never the exploded postings. Cross-segment duplicate
     (term, doc) rows are deduped in-kernel (np.unique), preserving M4
-    semantics pre-compaction; the bucket's live tombstones are masked
+    semantics pre-compaction; the store's live tombstones are masked
     right after the decode (store.apply_buckets)."""
     return apply_buckets(
         spark, store, rows,
@@ -584,9 +586,9 @@ def and_values(
     if not uniq:
         return spark.range(0).select(F.col("id").alias("doc_id"))
     rows = matching_rows(spark, store, uniq, min_doc, max_doc)
-    return _bucket_setop_rows(spark, store, rows, min_doc, max_doc, len(uniq)).orderBy(
-        "doc_id"
-    )
+    return _bucket_setop_rows(
+        spark, store, rows, min_doc, max_doc, len(uniq)
+    ).transform(doc_order)
 
 
 def term_df_table(

@@ -29,22 +29,8 @@ from inverted_index_spark.sources.store import (
     SegmentStore,
     apply_buckets,
     tombstoned,
+    worker_payload,
 )
-
-# batched-query maps above this many entries ship via broadcast instead
-# of the task closure (a closure is re-serialized into EVERY task; a
-# broadcast lands once per executor)
-BROADCAST_QMAP_THRESHOLD = 512
-
-
-def _maybe_broadcast(spark: SparkSession, payload):
-    try:
-        n = sum(len(v) if hasattr(v, "__len__") else 1 for v in payload)
-    except TypeError:
-        n = 0
-    if n <= BROADCAST_QMAP_THRESHOLD:
-        return None
-    return spark.sparkContext.broadcast(payload)
 
 
 def _one_task_topk(rows: DataFrame, query_map, avgdl: float, k: int) -> DataFrame:
@@ -96,8 +82,8 @@ def _purged_postings(spark: SparkSession, store: SegmentStore, raw: DataFrame) -
 
 def _purge_batch(pdf: pd.DataFrame, tomb: pd.DataFrame) -> pd.DataFrame:
     """:func:`_purged_postings`' kernel: one bucket's posting rows and
-    its tombstones (sorted by doc_id) → the rows with every tombstoned
-    posting removed (generation-scoped, store.tombstoned). Rows whose
+    the store's tombstones (sorted by doc_id) → the rows with every
+    tombstoned posting removed (generation-scoped, store.tombstoned). Rows whose
     doc envelope holds no tombstone pass through undecoded; the rest
     decode in one call."""
     cols = list(POSTINGS_SCHEMA.fieldNames())
@@ -509,18 +495,11 @@ class Searcher:
             for t in ts:
                 term_qids.setdefault(t, []).append(qid)
 
-        # large batches ride a broadcast, not the task closure: a 100k-
-        # query map serialized into EVERY task would dominate task
-        # launch; a broadcast ships once per executor. `payload` is
-        # None'd when broadcasting so the closure doesn't ALSO pickle
-        # the raw dicts.
-        payload = (qmap, term_qids)
-        bc = _maybe_broadcast(self.spark, payload)
-        if bc is not None:
-            payload = None
+        # a 100k-query batch rides a broadcast (store.worker_payload)
+        query_map = worker_payload(self.spark, (qmap, term_qids))
 
         def run(batches):
-            _qmap, _term_qids = bc.value if bc is not None else payload
+            _qmap, _term_qids = query_map()
             for pdf in batches:
                 out = _read_values_batch_rows(pdf, _qmap, _term_qids, g_lo, g_hi)
                 if len(out):
@@ -573,17 +552,7 @@ class Searcher:
             )
         live_terms = sorted({t for ts in qmap.values() for t in ts})
         rows = self._matching(live_terms)
-        # large batches ride a broadcast, not the task closure (one
-        # copy per executor instead of per task); payload None'd when
-        # broadcasting so the closure doesn't also pickle the dicts
-        payload = (qmap, idf_map)
-        bc = _maybe_broadcast(self.spark, payload)
-        if bc is not None:
-            payload = None
-
-        def query_map():
-            return bc.value if bc is not None else payload
-
+        query_map = worker_payload(self.spark, (qmap, idf_map))
         if self._one_task(sum(dfs[t] for ts in qmap.values() for t in ts)):
             return _one_task_topk(rows, query_map, avgdl, k)
 

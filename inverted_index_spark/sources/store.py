@@ -20,12 +20,16 @@ replaces the reference's RWMutex/TryLock dance
 (multiple/files_list.go:9-16).
 
 Reads plan from a warm snapshot, as the reference's opened index does
-(``OpenInvertedIndex`` caches at open), through two process-wide memos:
+(``OpenInvertedIndex`` caches at open), through three process-wide memos:
 
 - a gen file is parsed once: :func:`_read_gen_file` keys the parsed
   frame on the file's identity (path, inode, size, mtime), so a root
   that is removed and rebuilt reads its new manifest, and an expired
   generation still raises ``FileNotFoundError``;
+- a delete batch is read once: :func:`_delete_batch` keys its doc ids
+  on the directory's identity (path, inode, mtime), and
+  :meth:`SegmentStore.live_tombstones` the merged, sorted live delete
+  set on its batches' identities;
 - a parquet path set is listed once per SparkContext:
   :func:`read_parquet` keeps the ``spark.read.parquet`` DataFrame
   (file listing + schema). Committed segment and delete directories
@@ -51,7 +55,7 @@ from dataclasses import dataclass
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -109,6 +113,7 @@ DELETES = "deletes"
 _MEMO_LOCK = threading.Lock()
 _MANIFESTS: OrderedDict = OrderedDict()  # gen-file identity → parsed frame
 _SCANS: OrderedDict = OrderedDict()  # (application id, paths) → DataFrame
+_TOMBS: OrderedDict = OrderedDict()  # batch dir identities → doc ids / live set
 _MEMO_SIZE = 64
 
 
@@ -142,6 +147,18 @@ def _read_gen_file(path: str) -> pd.DataFrame:
     return m.copy()
 
 
+def _delete_batch(path: str) -> tuple[tuple, np.ndarray]:
+    """A committed delete batch's (directory identity, doc ids); its
+    parquet is read once per identity (module docstring)."""
+    st = os.stat(path)
+    key = (path, st.st_ino, st.st_mtime_ns)
+    ids = _memo_get(_TOMBS, key)
+    if ids is None:
+        ids = pd.read_parquet(path, columns=["doc_id"])["doc_id"].to_numpy(np.int64)
+        _memo_put(_TOMBS, key, ids)
+    return key, ids
+
+
 def read_parquet(spark: SparkSession, paths: list[str]) -> DataFrame:
     """``spark.read.parquet(*paths)``, listed once per SparkContext and
     path set (module docstring) — only for committed, immutable
@@ -161,7 +178,8 @@ _BACKOFF_BASE_S = 0.01
 _BACKOFF_CAP_S = 1.0
 
 
-# the tombstones of a bucket without any, in the shape kernels receive
+# the tombstones of a store without live deletes, in the shape kernels
+# receive
 NO_TOMBS = pd.DataFrame(
     {"doc_id": np.zeros(0, np.int64), "del_gen": np.zeros(0, np.int64)}
 )
@@ -173,13 +191,12 @@ def tombstoned(
     """The generation-scoped delete mask over ids decoded from
     ``pdf``'s rows (``row_lens[i]`` of ``docs`` came from row ``i``):
     True where a live tombstone NEWER than the row's source segment
-    (its ``_sgen``) names the doc. ``tomb`` is one bucket's
-    ``(doc_id, del_gen)`` rows, one per live batch naming the doc
-    (read_deletes), sorted by doc_id ascending then del_gen
-    descending: the left ``searchsorted`` lands on the doc's highest
-    batch generation, and "some batch newer than the segment names d"
-    ⇔ "max batch gen over d > segment gen". None when nothing is
-    masked."""
+    (its ``_sgen``) names the doc. ``tomb`` is the store's
+    ``(doc_id, del_gen)`` rows (SegmentStore.live_tombstones), sorted
+    by doc_id ascending then del_gen descending: the left
+    ``searchsorted`` lands on the doc's highest batch generation, and
+    "some batch newer than the segment names d" ⇔ "max batch gen over
+    d > segment gen". None when nothing is masked."""
     if not len(tomb) or not len(docs):
         return None
     td = tomb["doc_id"].to_numpy(np.int64)
@@ -190,12 +207,37 @@ def tombstoned(
     return dead if dead.any() else None
 
 
-def _tomb_order(tomb: pd.DataFrame) -> pd.DataFrame:
-    """One bucket's tombstone rows in the order :func:`tombstoned`
-    reads them: doc_id ascending, then del_gen descending."""
-    return tomb[["doc_id", "del_gen"]].sort_values(
-        ["doc_id", "del_gen"], ascending=[True, False], ignore_index=True
+def _tomb_frame(batches: list[tuple[np.ndarray, int]]) -> pd.DataFrame:
+    """``(doc ids, batch generation)`` per delete batch → the
+    ``(doc_id, del_gen)`` frame :func:`tombstoned` reads: doc_id
+    ascending, then del_gen descending."""
+    doc_id = np.concatenate([ids for ids, _ in batches])
+    del_gen = np.repeat(
+        np.array([g for _, g in batches], np.int64), [len(ids) for ids, _ in batches]
     )
+    order = np.lexsort((-del_gen, doc_id))
+    return pd.DataFrame({"doc_id": doc_id[order], "del_gen": del_gen[order]})
+
+
+BROADCAST_QMAP_THRESHOLD = 512
+
+
+def worker_payload(spark: SparkSession, payload: tuple):
+    """A zero-argument getter of ``payload`` for Python-worker code. Up
+    to :data:`BROADCAST_QMAP_THRESHOLD` entries (summed lengths of its
+    items: queries of a batch, live tombstones) it rides the task
+    closure; above, a broadcast — a closure is re-serialized into EVERY
+    task, a broadcast lands once per executor. The broadcast getter
+    holds only the handle, so the closure does not also pickle the
+    payload."""
+    try:
+        n = sum(len(v) if hasattr(v, "__len__") else 1 for v in payload)
+    except TypeError:
+        n = 0
+    if n <= BROADCAST_QMAP_THRESHOLD:
+        return lambda: payload
+    bc = spark.sparkContext.broadcast(payload)
+    return lambda: bc.value
 
 
 def apply_buckets(
@@ -207,51 +249,42 @@ def apply_buckets(
     rowwise: bool = False,
 ) -> DataFrame:
     """Run ``kernel(pdf, tomb)`` over stored rows carrying a ``bucket``
-    column — the one place tombstones reach the read and rewrite paths.
+    column — the one place tombstones reach the read and rewrite paths:
+    ``groupBy("bucket").applyInPandas``, or — ``rowwise``, for kernels
+    that need no whole bucket (row decoders) — ``mapInPandas`` over
+    scan batches, empty outputs dropped.
 
-    ``tomb`` is the bucket's live tombstones (see :func:`tombstoned`),
-    which every kernel applies right after decoding. Rows from a scan
-    with live deletes carry ``_sgen`` (SegmentStore.scan): they are
-    cogrouped by bucket with ``read_deletes(with_gen=True)`` keyed on
-    ``doc_id div bucket_size``, so each kernel call sees exactly its
-    bucket's slice of the delete set (co-partitioned, never broadcast),
-    in :func:`_tomb_order`. Rows without ``_sgen`` get :data:`NO_TOMBS`
-    and the deletes-free plan: ``groupBy("bucket").applyInPandas``, or
-    — ``rowwise``, for kernels that need no whole bucket (row
-    decoders) — ``mapInPandas`` over scan batches, empty outputs
-    dropped."""
-    if "_sgen" not in rows.columns:
-        if rowwise:
+    ``tomb``, masked by every kernel right after decoding
+    (:func:`tombstoned`), is the store's whole live delete set from the
+    driver's warm snapshot (SegmentStore.live_tombstones) for rows of a
+    scan with live deletes (they carry ``_sgen``), else
+    :data:`NO_TOMBS`. It rides the task closure, or a broadcast above
+    :data:`BROADCAST_QMAP_THRESHOLD` rows: no job and no exchange. Each
+    Python worker holds 16 B per live tombstone (1M deletes ≈ 16 MB);
+    merges retire the batches they absorb."""
+    live = store.live_tombstones() if "_sgen" in rows.columns else NO_TOMBS
+    tombs = worker_payload(spark, (live,))
+    if rowwise:
 
-            def run(batches):
-                for pdf in batches:
-                    out = kernel(pdf, NO_TOMBS)
-                    if len(out):
-                        yield out
+        def run(batches):
+            (t,) = tombs()
+            for pdf in batches:
+                out = kernel(pdf, t)
+                if len(out):
+                    yield out
 
-            return rows.mapInPandas(run, schema=schema)
-        return rows.groupBy("bucket").applyInPandas(
-            lambda pdf: kernel(pdf, NO_TOMBS), schema=schema
-        )
-    bs = store.pinned_bucket_size()
-    if bs is None:
-        raise ValueError(
-            "store has live deletes but no pinned bucket_size — "
-            "cannot map delete doc_ids onto buckets"
-        )
-    tombs = store.read_deletes(spark, with_gen=True).select(
-        F.expr(f"cast(doc_id div {int(bs)} as long)").alias("bucket"),
-        "doc_id",
-        "del_gen",
+        return rows.mapInPandas(run, schema=schema)
+    return rows.groupBy("bucket").applyInPandas(
+        lambda pdf: kernel(pdf, tombs()[0]), schema=schema
     )
-    return (
-        rows.groupBy("bucket")
-        .cogroup(tombs.groupBy("bucket"))
-        .applyInPandas(
-            lambda pdf, tomb: kernel(pdf, _tomb_order(tomb)),
-            schema=schema,
-        )
-    )
+
+
+def doc_order(df: DataFrame) -> DataFrame:
+    """``df`` sorted by doc_id in one partition. Not ``orderBy``: its
+    range exchange first samples its input, and that sampling job
+    re-runs the Python kernel feeding it. Not ``coalesce(1)``, which
+    would make the kernel stage itself one task."""
+    return df.repartition(1).sortWithinPartitions("doc_id")
 
 
 def _live_doc_rows(pdf: pd.DataFrame, tomb: pd.DataFrame) -> pd.DataFrame:
@@ -640,7 +673,7 @@ class SegmentStore:
         (N, avgdl, df) — see Searcher.open's purge and bm25.corpus_stats.
         The term DICTIONARY (read_terms) keeps a term until a
         compaction rewrites its last posting away, like Lucene's.
-        Batches are GENERATION-SCOPED (read_deletes docstring): a
+        Batches are GENERATION-SCOPED (live_tombstones docstring): a
         batch only tombstones segments committed BEFORE it, so a doc
         re-added in a LATER segment is visible again with its new
         content — reindex_docs builds the atomic delete+add on this.
@@ -685,8 +718,12 @@ class SegmentStore:
             df = spark.createDataFrame([(i,) for i in ids], "doc_id long")
         del_id = new_segment_id()
         path = os.path.join(self.seg_dir(del_id), "deletes")
+        if isinstance(doc_ids, DataFrame):
+            obs = Observation(f"deletes-{del_id}")
+            df = df.observe(obs, F.count(F.lit(1)).alias("n"))
         df.write.mode("overwrite").parquet(path)
-        n = spark.read.parquet(path).count()
+        # the batch size rides the write job: no read-back job
+        n = int(obs.get["n"]) if isinstance(doc_ids, DataFrame) else len(ids)
         if n == 0:
             shutil.rmtree(self.seg_dir(del_id), ignore_errors=True)
             return None
@@ -718,37 +755,37 @@ class SegmentStore:
     def has_deletes(self) -> bool:
         return len(self.live_deletes()) > 0
 
-    def read_deletes(self, spark: SparkSession, with_gen: bool = False) -> DataFrame:
-        """Union of live delete batches → distinct doc_id DataFrame.
-
-        ``with_gen`` instead returns one ``(doc_id, del_gen)`` row per
-        live batch naming the doc, ``del_gen`` being that batch's
-        generation — no aggregate, so no exchange. A batch is
-        GENERATION-SCOPED (Lucene per-segment liveness / Iceberg
-        equality-delete sequence numbers): it applies only to segments
-        with ``generation_added`` strictly below the batch's own, so a
-        doc re-added AFTER its delete (reindex) is visible from the
-        newer segment. Readers need only the doc's highest batch
-        generation, which :func:`tombstoned` finds in each bucket's
-        sorted rows."""
+    def read_deletes(self, spark: SparkSession) -> DataFrame:
+        """Union of live delete batches → distinct doc_id DataFrame."""
         dels = self.live_deletes()
         if not len(dels):
-            return spark.createDataFrame(
-                [], "doc_id long" + (", del_gen long" if with_gen else "")
-            )
+            return spark.createDataFrame([], "doc_id long")
         paths = [os.path.join(self.seg_dir(s), "deletes") for s in dels["segment_id"]]
-        if not with_gen:
-            return read_parquet(spark, paths).select("doc_id").distinct()
-        parts = [
-            read_parquet(spark, [p]).select(
-                "doc_id", F.lit(int(gen)).cast("long").alias("del_gen")
-            )
-            for p, gen in zip(paths, dels["generation_added"])
+        return read_parquet(spark, paths).select("doc_id").distinct()
+
+    def live_tombstones(self) -> pd.DataFrame:
+        """The live delete set as one pandas frame of ``(doc_id,
+        del_gen)`` rows, one per live batch naming the doc with that
+        batch's generation, in :func:`_tomb_frame` order. A batch is
+        GENERATION-SCOPED (Lucene per-segment liveness / Iceberg
+        equality-delete sequence numbers): it applies only to segments
+        with ``generation_added`` strictly below its own, so a doc
+        re-added AFTER its delete (reindex) is visible from the newer
+        segment. Memoized per live batch set (module docstring); the
+        frame is shared and must not be modified."""
+        dels = self.live_deletes()
+        if not len(dels):
+            return NO_TOMBS
+        batches = [
+            (*_delete_batch(os.path.join(self.seg_dir(s), "deletes")), int(g))
+            for s, g in zip(dels["segment_id"], dels["generation_added"])
         ]
-        out = parts[0]
-        for p in parts[1:]:
-            out = out.unionByName(p)
-        return out
+        key = tuple((k, g) for k, _, g in batches)
+        tombs = _memo_get(_TOMBS, key)
+        if tombs is None:
+            tombs = _tomb_frame([(ids, g) for _, ids, g in batches])
+            _memo_put(_TOMBS, key, tombs)
+        return tombs
 
     def delete_scan_classes(
         self, segment_ids: list[str] | None = None
@@ -915,12 +952,7 @@ class SegmentStore:
             )
         raw = self.scan(spark, "docstats", ids, scoped=not include_deleted)
         if "_sgen" in raw.columns:
-            # no pinned size → apply_buckets refuses to map tombstones
-            bs = self.pinned_bucket_size() or 1
-            raw = self._live_docs(
-                spark,
-                raw.withColumn("bucket", F.expr(f"cast(doc_id div {int(bs)} as long)")),
-            ).drop("bucket")
+            raw = self._live_docs(spark, raw)
         # same doc may appear in several segments pre-compaction → dedup
         return raw.dropDuplicates(["doc_id"])
 

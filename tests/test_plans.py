@@ -232,9 +232,11 @@ def test_gated_small_query_plans_have_no_exchange(spark, store):
 
 def test_live_delete_reads_mask_tombstones_in_bucket_kernels(spark, tmp_path):
     """With live deletes, read_values, and_values and phrase_match keep
-    their bucket kernels: the rows are cogrouped with each bucket's
-    tombstones (FlatMapCoGroupsInPandas) and masked in-kernel — no
-    exploded anti-join (LeftAnti) of decoded rows against the deletes."""
+    their bucket kernels and mask the store's tombstones in-kernel: no
+    exploded anti-join (LeftAnti) of decoded rows against the deletes,
+    no cogroup exchange of the delete batches (the tombstones ride the
+    kernel from the driver's snapshot), and no range exchange for the
+    doc order (its sampling job would re-run the kernel)."""
     from inverted_index_spark.operators.positions import phrase_match
     from inverted_index_spark.operators.query import and_values, read_values
     from inverted_index_spark.plans import formatted_plan
@@ -250,15 +252,17 @@ def test_live_delete_reads_mask_tombstones_in_bucket_kernels(spark, tmp_path):
         phrase_match(spark, s, ["w00000", "w00001"], slop=2),
     ):
         plan = formatted_plan(df)
-        assert "FlatMapCoGroupsInPandas" in plan
+        assert "FlatMapGroupsInPandas" in plan
+        assert "FlatMapCoGroupsInPandas" not in plan
         assert "LeftAnti" not in plan
+        assert "rangepartitioning" not in plan
 
 
 def test_live_delete_tombstones_need_no_doc_id_aggregate(spark, tmp_path):
-    """The tombstone side of a live-delete read is the plain union of
-    the live batches, each row carrying its own batch generation: no
-    HashAggregate keyed on doc_id (and no exchange feeding one), even
-    when two batches name the same doc."""
+    """The tombstones of a live-delete read need no plan of their own:
+    no HashAggregate keyed on doc_id (and no exchange feeding one), no
+    cogroup and no range exchange, even when two batches name the same
+    doc."""
     import re
 
     from inverted_index_spark.operators.query import read_values
@@ -273,4 +277,5 @@ def test_live_delete_tombstones_need_no_doc_id_aggregate(spark, tmp_path):
     nodes = [n for n in plan.split("\n\n") if re.match(r"\(\d+\) ", n)]
     aggs = [n for n in nodes if n.split("\n", 1)[0].split()[1] == "HashAggregate"]
     assert not [a for a in aggs if re.search(r"^Keys \[\d+\]: \[doc_id#", a, re.M)]
-    assert "FlatMapCoGroupsInPandas" in plan
+    assert "FlatMapCoGroupsInPandas" not in plan
+    assert "rangepartitioning" not in plan

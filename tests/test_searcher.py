@@ -93,14 +93,14 @@ def test_batched_paths_broadcast_query_map(spark, setup, monkeypatch):
     sc.broadcast instead of the task closure) must not change results
     — topk_batch and read_values_batch both (round-3: a 100k-query
     batch would otherwise re-serialize the map into every task)."""
-    import inverted_index_spark.operators.search as search_mod
+    import inverted_index_spark.sources.store as store_mod
 
     store, searcher = setup
     qs_topk = {"q1": ["w00000"], "q2": ["w00001", "w00002"]}
     qs_read = {"a": (["w00000"], 50, 400), "b": (["w00001", "w00002"], None, None)}
     plain_topk = [tuple(r) for r in searcher.topk_batch(qs_topk, k=5).collect()]
     plain_read = [tuple(r) for r in searcher.read_values_batch(qs_read).collect()]
-    monkeypatch.setattr(search_mod, "BROADCAST_QMAP_THRESHOLD", 0)
+    monkeypatch.setattr(store_mod, "BROADCAST_QMAP_THRESHOLD", 0)
     bc_topk = [tuple(r) for r in searcher.topk_batch(qs_topk, k=5).collect()]
     bc_read = [tuple(r) for r in searcher.read_values_batch(qs_read).collect()]
     assert bc_topk == plain_topk and len(plain_topk) > 0

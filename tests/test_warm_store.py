@@ -1,15 +1,18 @@
 """Warm store snapshot (sources/store.py module docstring): a repeat read
-at one manifest generation parses no manifest and lists no parquet
-files, while every commit (a delete batch, an appended segment, a
-merge) and a rebuild at the same root is seen by the next read."""
+at one manifest generation parses no manifest, reads no delete batch
+and lists no parquet files, while every commit (a delete batch, an
+appended segment, a merge) and a rebuild at the same root is seen by
+the next read. A warm point read runs at most three Spark jobs."""
 
 from __future__ import annotations
 
 import shutil
+import uuid
 
 import numpy as np
 import pandas as pd
 import pytest
+from pyspark import SparkContext
 from pyspark.sql.readwriter import DataFrameReader
 
 from inverted_index_spark.functions.tokenizer import tokenize_text
@@ -20,8 +23,9 @@ from inverted_index_spark.operators.query import and_values, read_values
 from inverted_index_spark.oracle import OracleIndex
 from inverted_index_spark.sources.store import (
     MERGED,
+    BROADCAST_QMAP_THRESHOLD,
     SegmentStore,
-    _tomb_order,
+    _tomb_frame,
     tombstoned,
 )
 from inverted_index_spark.sources.transcripts import generate_transcripts
@@ -51,24 +55,34 @@ def _oracle(pdf: pd.DataFrame, dead=()):
     alive = pdf[~pdf["doc_id"].isin(list(dead))]
     orc = OracleIndex.from_docs(alive)
     both = set.intersection(*[set(orc.postings.get(t, {})) for t in TERMS])
-    phrase = [int(d) for d, t in zip(alive["doc_id"], alive["text"]) if _adjacent(t)]
-    return orc.read_values(TERMS, LO, HI), sorted(both), sorted(phrase)
+    return orc.read_values(TERMS, LO, HI), sorted(both), _phrase_docs(alive, 0)
 
 
-def _adjacent(text: str) -> bool:
-    tokens = list(tokenize_text(text))
-    return any(tokens[i : i + 2] == TERMS for i in range(len(tokens) - 1))
+def _phrase_docs(alive: pd.DataFrame, slop: int) -> list[int]:
+    """Docs where TERMS[1] follows some TERMS[0] within ``slop`` extra
+    tokens (phrase_match's ordered sloppy phrase)."""
+    hits = []
+    for d, text in zip(alive["doc_id"], alive["text"]):
+        toks = list(tokenize_text(text))
+        if any(
+            t == TERMS[0] and TERMS[1] in toks[i + 1 : i + 2 + slop]
+            for i, t in enumerate(toks)
+        ):
+            hits.append(int(d))
+    return sorted(hits)
 
 
 def _counting(mp):
-    """Count manifest parses (pd.read_parquet) and Spark parquet
+    """Count manifest parses and delete-batch reads (pd.read_parquet of
+    an open gen file or of a ``deletes`` directory) and Spark parquet
     listings (DataFrameReader.parquet) while ``mp`` is active."""
-    counts = {"manifest": 0, "listing": 0}
+    counts = {"manifest": 0, "deletes": 0, "listing": 0}
     read_pq, listing = pd.read_parquet, DataFrameReader.parquet
 
-    def counted_read(*a, **k):
-        counts["manifest"] += 1
-        return read_pq(*a, **k)
+    def counted_read(src, *a, **k):
+        is_batch = isinstance(src, str) and src.endswith("deletes")
+        counts["deletes" if is_batch else "manifest"] += 1
+        return read_pq(src, *a, **k)
 
     def counted_listing(*a, **k):
         counts["listing"] += 1
@@ -97,13 +111,17 @@ def test_reads_stay_warm_at_one_generation_and_see_each_commit(
     with monkeypatch.context() as mp:
         counts = _counting(mp)
         assert _answers(spark, store) == want
-    assert counts == {"manifest": 0, "listing": 0}
+    assert counts == {"manifest": 0, "deletes": 0, "listing": 0}
 
     gen = store.current_generation()
     store.delete_docs(spark, [3, 80])
     assert store.current_generation() == gen + 1
     dead += [3, 80]
-    assert _answers(spark, store) == _oracle(pdf[pdf["doc_id"] < 120], dead)
+    # the next read sees the new batch and reads only that one
+    with monkeypatch.context() as mp:
+        counts = _counting(mp)
+        assert _answers(spark, store) == _oracle(pdf[pdf["doc_id"] < 120], dead)
+    assert counts["deletes"] == 1
 
     _build(spark, store, docs, 120)  # append
     assert store.current_generation() == gen + 2
@@ -131,15 +149,75 @@ def test_reads_stay_warm_at_one_generation_and_see_each_commit(
 def test_tombstoned_uses_the_highest_batch_generation(gens):
     """A doc named by batches of generation 3 and 7 (in either order)
     is dead for a segment of generation 5 and alive for one of 8."""
-    tomb = _tomb_order(
-        pd.DataFrame(
-            {
-                "doc_id": np.array([9, 4, 9], np.int64),
-                "del_gen": np.array([gens[0], 3, gens[1]], np.int64),
-            }
-        )
+    tomb = _tomb_frame(
+        [(np.array([9, 4] if g == 3 else [9], np.int64), g) for g in gens]
     )
     rows = pd.DataFrame({"_sgen": np.array([5, 8], np.int64)})
     docs = np.array([9, 9], np.int64)
     dead = tombstoned(rows, np.array([1, 1]), docs, tomb)
     assert dead is not None and dead.tolist() == [True, False]
+
+
+def _two_segments_with_deletes(spark, tmp_path, n_docs, dead):
+    docs = generate_transcripts(spark, n_docs, include_doc_id=True)
+    pdf = docs.select("doc_id", "text").toPandas()
+    store = SegmentStore(str(tmp_path / "idx"))
+    _build(spark, store, docs, 0, n_docs // 2)
+    _build(spark, store, docs, n_docs // 2)
+    store.delete_docs(spark, dead)
+    return store, pdf[~pdf["doc_id"].isin(dead)]
+
+
+def _jobs(spark, read):
+    """(rows, Spark jobs) of one ``read().collect()`` under its own job
+    group."""
+    sc = spark.sparkContext
+    group = f"point-read-{uuid.uuid4().hex[:8]}"
+    sc.setJobGroup(group, "point read")
+    try:
+        rows = read().collect()
+    finally:
+        sc.setJobGroup("", "")
+    return rows, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_warm_point_reads_run_at_most_three_jobs(spark, tmp_path):
+    """A point read over two segments with a live delete batch runs its
+    scan exchange, its one Python kernel stage and the final sort: no
+    job for the tombstones, none re-running the kernel for a range
+    exchange's sample."""
+    store, alive = _two_segments_with_deletes(spark, tmp_path, 120, [1, 2, 70])
+    orc = OracleIndex.from_docs(alive)
+    both = set.intersection(*[set(orc.postings.get(t, {})) for t in TERMS])
+    reads = {
+        "read_values": (
+            lambda: read_values(spark, store, TERMS, LO, HI),
+            orc.read_values(TERMS, LO, HI),
+        ),
+        "and_values": (lambda: and_values(spark, store, TERMS), sorted(both)),
+        "phrase": (lambda: phrase_match(spark, store, TERMS), _phrase_docs(alive, 0)),
+        "phrase~2": (
+            lambda: phrase_match(spark, store, TERMS, slop=2),
+            _phrase_docs(alive, 2),
+        ),
+    }
+    for name, (read, want) in reads.items():
+        read().collect()  # warm the store's memos
+        rows, jobs = _jobs(spark, read)
+        assert [int(r["doc_id"]) for r in rows] == want, name
+        assert jobs <= 3, (name, jobs)
+
+
+def test_tombstones_above_the_broadcast_threshold(spark, tmp_path, monkeypatch):
+    """A live delete set larger than BROADCAST_QMAP_THRESHOLD ships to
+    the kernels as a broadcast, with the same answers."""
+    dead = list(range(0, 2 * (BROADCAST_QMAP_THRESHOLD + 10), 2))
+    store, alive = _two_segments_with_deletes(spark, tmp_path, 1200, dead)
+    assert len(store.live_tombstones()) > BROADCAST_QMAP_THRESHOLD
+    sent = []
+    broadcast = SparkContext.broadcast
+    monkeypatch.setattr(
+        SparkContext, "broadcast", lambda sc, v: sent.append(v) or broadcast(sc, v)
+    )
+    assert _answers(spark, store) == _oracle(alive)
+    assert len(sent) == 3
